@@ -4614,12 +4614,7 @@ object ExtQueries {
           concat(lit("src"), (($"doc_id" * 3 + 1) % 7).cast("string")).as("dst")))
         .unionAll(d.filter($"doc_id" % 11 === 0)
           .select($"source".as("src"), lit("hub").as("dst")))
-      // checkpoint=false: lineage truncation exists for DEEP loops;
-      // at 3 iterations the 27-subtree plan analyzes instantly and
-      // skipping the three eager materializations cuts the gate's
-      // fixed cost ~3x (values identical either way)
-      graft.ext.LinkGraph.pageRank(raw, "src", "dst", iters = 3, damping = 0.85,
-          checkpoint = false)
+      graft.ext.LinkGraph.pageRank(raw, "src", "dst", iters = 3, damping = 0.85)
         .orderBy($"host")
     },
     Some(graft.ext.LinkGraph.pageRankOracleSql(
@@ -4703,7 +4698,7 @@ object ExtQueries {
           .select($"source".as("src"), lit("hub").as("dst")))
       val seeds = Seq("src0", "src1", "vetted.example").toDF("host")
       graft.ext.LinkGraph.trustRank(raw, "src", "dst", seeds,
-          iters = 3, damping = 0.85, checkpoint = false)
+          iters = 3, damping = 0.85)
         .orderBy($"host")
     },
     Some(graft.ext.LinkGraph.trustRankOracleSql(
@@ -6669,8 +6664,7 @@ object ExtQueries {
           concat(lit("src"), (($"doc_id" * 3 + 1) % 7).cast("string")).as("dst")))
         .unionAll(d.filter($"doc_id" % 11 === 0)
           .select($"source".as("src"), lit("hub").as("dst")))
-      graft.ext.LinkGraph.hits(raw, "src", "dst", iters = 2,
-          checkpoint = false)
+      graft.ext.LinkGraph.hits(raw, "src", "dst", iters = 2)
         .withColumn("hub", $"hub".cast("long"))
         .withColumn("auth", $"auth".cast("long"))
         .orderBy($"host")

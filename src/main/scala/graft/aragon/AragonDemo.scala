@@ -1,6 +1,5 @@
 package graft.aragon
 
-import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** CLI entry point for the hospital pipeline: load one HHS weekly file
@@ -12,26 +11,17 @@ import org.apache.spark.sql.types._
 object AragonDemo {
   def main(args: Array[String]): Unit = {
     val Array(hhsCsv, qualCsv, qualDate) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def empty(fields: (String, DataType)*) = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(fields.map { case (n, t) => StructField(n, t) }))
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    import AragonPipeline.emptyDf
 
     val hhs = HhsLoad.load(spark, hhsCsv,
-      empty("hospital_pk" -> StringType),
-      empty("hospital_fk" -> StringType),
-      empty("hospital_fk" -> StringType, "collection_week" -> DateType))
+      emptyDf(spark, "hospital_pk" -> StringType),
+      emptyDf(spark, "hospital_fk" -> StringType),
+      emptyDf(spark, "hospital_fk" -> StringType, "collection_week" -> DateType))
     println(s"HHS load: ${hhs.metrics}")
 
     val qual = QualityLoad.load(spark, qualCsv, java.sql.Date.valueOf(qualDate),
-      empty("facility_id" -> StringType, "data_date" -> DateType))
+      emptyDf(spark, "facility_id" -> StringType, "data_date" -> DateType))
     println(s"Quality load: ${qual.metrics}")
 
     println("Bed summary (4 most recent weeks):")

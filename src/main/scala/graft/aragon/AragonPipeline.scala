@@ -58,7 +58,7 @@ object AragonPipeline {
     }
   }
 
-  private def emptyDf(spark: SparkSession, fields: (String, DataType)*): DataFrame =
+  private[aragon] def emptyDf(spark: SparkSession, fields: (String, DataType)*): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(fields.map { case (n, t) => StructField(n, t) }))
 

@@ -3,7 +3,7 @@ package graft.aragon
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.{Cleaning, Dedup, Validate}
+import graft.ops.{Cleaning, Validate}
 import AragonSchema._
 
 /** The CMS quality snapshot load (reference load_quality.py, SURVEY.md
@@ -12,10 +12,12 @@ import AragonSchema._
   * Reference shape: column-pruned pandas scan → vectorized clean → ONE
   * batched IN-list dup probe → 500-row executemany with row-at-a-time
   * fallback. Spark shape: single scan (Catalyst prunes the 38-col CSV
-  * to what the plan touches) → clean → anti-join vs the (facility_id @
-  * data_date) snapshot → validate-split (pre-validating what the DB
-  * CHECK would reject, so the sink write is clean — the idiomatic
-  * replacement for the batch-then-row fallback, SURVEY §3 E2).
+  * to what the plan touches) → clean → one tagged frame: a duplicate
+  * flag from a broadcast join against the (facility_id @ data_date)
+  * snapshot and a validity flag pre-validating what the DB CHECK would
+  * reject, so the sink write is clean — the idiomatic replacement for
+  * the batch-then-row fallback, SURVEY §3 E2. Inserts, quarantine and
+  * the load accounting are filters and one aggregate over that frame.
   *
   * Note the reference does NOT dedupe in-file facility_id duplicates
   * (no unique constraint on the serial-pk table) — we reproduce that:
@@ -73,34 +75,39 @@ object QualityLoad {
            existingKeys: DataFrame): Result = {
 
     val raw = readRaw(spark, csvPath).cache()
-    val typed = clean(raw, date)
-
-    // D3: one batched probe ≡ anti-join on facility_id at this date
+    // ONE tagged frame (the HhsLoad shape). `__dup`: D3's batched probe
+    // as a broadcast join on facility_id at this date. `__valid`: P10's
+    // CHECK (hospital_overall_rating >= 0) plus the BOOLEAN-column
+    // constraint on emergency_services (outside {Yes, No, null} fails
+    // the reference's insert → quarantine)
     val existingAtDate = existingKeys.toDF("facility_id", "data_date")
       .filter(col("data_date") === lit(date)).select("facility_id")
-    val fresh = Dedup.antiDedup(typed, Seq("facility_id"), existingAtDate)
+      .dropDuplicates("facility_id")
+      .withColumn("__dup", lit(true))
+    val tagged = clean(raw, date)
+      .join(broadcast(existingAtDate), Seq("facility_id"), "left")
+      .withColumn("__dup", col("__dup").isNotNull)
+      .withColumn("__valid", Validate.validPredicate(Seq(
+        col("hospital_overall_rating").isNull || col("hospital_overall_rating") >= 0,
+        col(EsRaw).isNull || col(EsRaw).isin("Yes", "No"))))
+      .cache()
+    val keep = !col("__dup") && col("__valid")
 
-    // P10: CHECK (hospital_overall_rating >= 0) pre-validated, plus the
-    // BOOLEAN-column constraint on emergency_services: anything outside
-    // {Yes, No, null} fails the reference's insert → quarantine
-    val (valid, invalid) = Validate.validateSplit(fresh,
-      Seq(col("hospital_overall_rating").isNull || col("hospital_overall_rating") >= 0,
-          col(EsRaw).isNull || col(EsRaw).isin("Yes", "No")))
-    val validC = valid.cache()
-    val invalidC = invalid.cache()
+    val quarantine = raw
+      .join(tagged.filter(!keep).select(RowId), Seq(RowId), "left_semi")
+      .drop(RowId)
 
-    val droppedIds = typed.select(RowId)
-      .join(validC.select(RowId), Seq(RowId), "left_anti")
-    val quarantine = raw.join(droppedIds, Seq(RowId), "left_semi").drop(RowId)
-
-    val total = typed.count()
-    val nValid = validC.count()
-    val nInvalid = invalidC.count()
+    // Metrics: ONE aggregation action over the tagged frame
+    val m = tagged.agg(
+      count(lit(1)),
+      count(when(keep, 1)),
+      count(when(!col("__dup") && !col("__valid"), 1))).head()
+    val total = m.getLong(0)
     val metrics = Metrics(
       totalRows = total,
-      inserted = nValid,
-      duplicates = total - nValid - nInvalid,
-      invalid = nInvalid)
+      inserted = m.getLong(1),
+      duplicates = total - m.getLong(1) - m.getLong(2),
+      invalid = m.getLong(2))
 
     // S8 (reference: logging_module.py + load_quality.py:145-146)
     org.slf4j.LoggerFactory.getLogger(getClass).info(
@@ -108,10 +115,10 @@ object QualityLoad {
         s"${metrics.totalRows} (${metrics.duplicates} duplicates, ${metrics.invalid} invalid)")
 
     // DDL column order (ipynb cell-3 insert order, load_quality.py:114)
-    val out = validC.select(
+    val out = tagged.filter(keep).select(
       col("facility_id"), col("hospital_type"), col("hospital_ownership"),
       col("emergency_services"), col("hospital_overall_rating"), col("data_date"))
 
-    Result(out, quarantine, metrics, caches = Seq(raw, validC, invalidC))
+    Result(out, quarantine, metrics, caches = Seq(raw, tagged))
   }
 }

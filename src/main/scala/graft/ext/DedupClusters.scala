@@ -35,10 +35,10 @@ import org.apache.spark.sql.functions._
   *     orders of magnitude smaller than the corpus
   *     (candidate-proportional by LSH design) — and the edge set only
   *     shrinks toward |nodes| as stars form.
-  *   - The per-round driver convergence check is one scalar count —
-  *     a Pregel-style control-flow read, not a data collect; lineage
-  *     is cut with localCheckpoint each round so plans don't grow
-  *     exponentially across iterations.
+  *   - The rounds run on [[Rounds]]: each round's edge set is a
+  *     releasable lineage cut, and the fixpoint test is one fused
+  *     aggregate per round — a Pregel-style control-flow read, not a
+  *     data collect.
   *   - Hitting maxIter without convergence is an ERROR, never a
   *     partial result: downstream guarantees (leakageSafeSplit's
   *     no-straddle property) depend on component integrity, so a
@@ -132,46 +132,22 @@ object DedupClusters {
     // canonical directed edge set, larger → smaller; self-loops carry
     // no connectivity. distinct() here bounds every later round by the
     // true edge count (LSH emits the same pair from multiple bands).
-    var edgesCut = GraftBridge.persistCutFrame(
+    val edgesCut = GraftBridge.persistCutFrame(
       raw
         .select(greatest(col("id1"), col("id2")).as("u"),
           least(col("id1"), col("id2")).as("v"))
         .filter(col("u") =!= col("v"))
         .distinct(), eager = true)
-    var edges = edgesCut.df
     rawCut.foreach(_.release())
 
-    // the eager persist already counted the edge set — no isEmpty /
-    // count() jobs on top
-    var nEdges = edgesCut.eagerCount.getOrElse(edges.count())
-    var converged = nEdges == 0L
-    var iter = 0
-
     // Star rounds run over BOUNDED state (the candidate-pair edge set,
-    // which only shrinks), so the per-round cost here is driver/job
-    // overhead, not data (r17 PERF: 8-core beat 32-core on every CC
-    // gate; wall ≈ 2× in-job time). Two levers, both scale-adaptive
-    // (optimization guide §2.2/§2.4, r18):
-    //  - AQE OFF for the rounds: adaptive execution materializes every
-    //    exchange as its own stage-job, so one convergence count cost
-    //    ~4 driver round-trips per round; with the edge count already
-    //    measured there is nothing left for AQE to adapt. Restored in
-    //    a finally — the setup cuts above and the labels join below
-    //    still plan adaptively.
-    //  - shuffle partitions from the MEASURED edge count (~2M edges
-    //    per partition ≈ tens of MB), capped at session parallelism —
-    //    at fixture scale the rounds stop fanning 32 near-empty tasks
-    //    per exchange; at 100 TB pair lists they keep full width.
-    val sess = pairs.sparkSession
-    val roundParts = math.max(1L, math.min(
-      (nEdges + 1999999L) / 2000000L,
-      sess.sparkContext.defaultParallelism.toLong)).toString
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions", "200")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.shuffle.partitions", roundParts)
-    try {
-    while (!converged && iter < maxIter) {
+    // which only shrinks), so the per-round cost is driver/job overhead,
+    // not data (r17 PERF: 8-core beat 32-core on every CC gate; wall ≈
+    // 2× in-job time). Rounds runs them non-adaptively in a private
+    // session with partitions sized from the measured edge count, and
+    // tests the fixpoint with one fused aggregate per round (r18).
+    val rounds = Rounds.run(edgesCut, maxIter, Rounds.Until.SameRows,
+        adaptive = false) { (edges, _) =>
       // Each phase computes its per-node minimum with a WINDOW over the
       // phase's one hash-exchange — not a groupBy + self-join, which
       // would shuffle the edge set twice per phase. 3 shuffles/round
@@ -198,68 +174,19 @@ object DedupClusters {
       // which would recompute the window subtree twice).
       val wUv = org.apache.spark.sql.expressions.Window
         .partitionBy("u").orderBy("v")
-      val nextCut = GraftBridge.persistCutFrame(
-        afterLarge
-          .withColumn("m", min(col("v")).over(wU))
-          .withColumn("__rn", row_number().over(wUv))
-          .select(explode(array(
-            when(col("v") =!= col("m"),
-              struct(col("v").as("u"), col("m").as("v"))),
-            when(col("__rn") === 1,
-              struct(col("u"), col("m").as("v"))))).as("__e"))
-          .filter(col("__e").isNotNull)
-          .select(col("__e.u").as("u"), col("__e.v").as("v"))
-          .distinct())
-      val next = nextCut.df
-
-      // fixpoint test. Two shapes by MEASURED state size (r18):
-      //  - small edge sets (the common fixture/steady-state case, and
-      //    every star-stable incremental input whose count never
-      //    shrinks): ONE aggregation job computes the next-round count
-      //    AND the exact symmetric-difference count together — the
-      //    count-then-diff split paid two driver round-trips per round
-      //    and, on star-stable inputs (q84's incremental labels), ran
-      //    the diff every round anyway.
-      //  - large edge sets: cheap-first — compare COUNTS (scalar
-      //    aggregates on materialized cuts) and run the full
-      //    symmetric-difference shuffle only when counts agree (~once
-      //    per run); early shrinking rounds then never pay the union
-      //    shuffle of two corpus-scale pair lists.
-      val (nNext, changed) =
-        if (nEdges < 50000000L) {
-          val r = next.select(col("u"), col("v"), lit(1L).as("__n"))
-            .unionAll(edges.select(col("u"), col("v"), lit(0L).as("__n")))
-            .groupBy(col("u"), col("v"))
-            .agg(sum(col("__n")).as("nn"), count(lit(1)).as("cnt"))
-            .agg(sum(col("nn")).as("n"),
-              count(when(col("nn") =!= 1L || col("cnt") =!= 2L, 1)).as("chg"))
-            .head()
-          (r.getLong(0), r.getLong(1))
-        } else {
-          val nN = next.count()
-          val chg =
-            if (nN != nEdges) 1L
-            else next.unionAll(edges)
-              .groupBy("u", "v").count()
-              .filter(col("count") =!= 2)
-              .count()
-          (nN, chg)
-        }
-      // round N is materialized and the convergence check has read
-      // round N-1 for the last time — free N-1's blocks NOW, keeping
-      // in-flight retention at O(1) frames
-      edgesCut.release()
-      edgesCut = nextCut
-      edges = next
-      nEdges = nNext
-      converged = changed == 0
-      iter += 1
+      afterLarge
+        .withColumn("m", min(col("v")).over(wU))
+        .withColumn("__rn", row_number().over(wUv))
+        .select(explode(array(
+          when(col("v") =!= col("m"),
+            struct(col("v").as("u"), col("m").as("v"))),
+          when(col("__rn") === 1,
+            struct(col("u"), col("m").as("v"))))).as("__e"))
+        .filter(col("__e").isNotNull)
+        .select(col("__e.u").as("u"), col("__e.v").as("v"))
+        .distinct()
     }
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
-    if (!converged)
+    if (!rounds.converged)
       throw new IllegalStateException(
         s"connectedComponents: star contraction did not converge in $maxIter rounds; " +
           "refusing to return possibly-split components (leakage-safety depends on " +
@@ -269,10 +196,10 @@ object DedupClusters {
     // root). Emit every node; nodes absent from edges (singletons via
     // self-pairs, or roots) label themselves via the left join.
     val labels = nodes
-      .join(edges.withColumnRenamed("u", "id").withColumnRenamed("v", "__root"), Seq("id"), "left")
+      .join(rounds.df.withColumnRenamed("u", "id").withColumnRenamed("v", "__root"),
+        Seq("id"), "left")
       .select(col("id"), coalesce(col("__root"), col("id")).as("component"))
-    val finalCut = edgesCut
-    (labels, iter, () => { nodesCut.release(); finalCut.release() })
+    (labels, rounds.rounds, () => { nodesCut.release(); rounds.release() })
   }
 
   /** Incremental connected components: fold a new batch of candidate

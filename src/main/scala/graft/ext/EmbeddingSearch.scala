@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.GraftBridge.CutFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -45,17 +46,32 @@ object EmbeddingSearch {
     * map-side-combined; output (group_id, pooled array<double>).
     */
   def meanPool(df: DataFrame, group: Column, vec: Column): DataFrame =
-    df.select(group.as("group_id"), posexplode(vec).as(Seq("__pos", "__v")))
-      .groupBy(col("group_id"), col("__pos"))
+    decimalMeans(df.select(group.as("group_id"), vec.as("__vec")),
+        Seq("group_id"), col("__vec"))
+      .select(col("group_id"), col("__mean").as("pooled"))
+
+  /** Per-group, per-dimension mean of the array column `vec` — the
+    * centroid update of the Lloyd loops ([[kmeansCentroids]],
+    * [[VectorQuant.pqTrain]]) and [[meanPool]]. Sums go through
+    * DECIMAL(38,6), so the plan may re-partition freely, then ONE IEEE
+    * division per dimension. One shuffle keyed (keys, dim),
+    * map-side-combined, then one keyed by `keys` to assemble the array.
+    * Output: `keys`, `__n` (member rows), `__mean` array<double>.
+    */
+  private[ext] def decimalMeans(df: DataFrame, keys: Seq[String], vec: Column): DataFrame = {
+    val k = keys.map(col)
+    df.select(k :+ posexplode(vec).as(Seq("__pos", "__v")): _*)
+      .groupBy(k :+ col("__pos"): _*)
       .agg(sum(col("__v").cast("double").cast("decimal(38,6)")).as("__s"),
         count(lit(1)).as("__n"))
-      .select(col("group_id"), col("__pos"),
-        (col("__s").cast("double") / col("__n")).as("__m"))
-      .groupBy(col("group_id"))
-      .agg(array_sort(collect_list(struct(col("__pos"), col("__m"))))
-        .as("__pm"))
-      .select(col("group_id"),
-        transform(col("__pm"), s => s.getField("__m")).as("pooled"))
+      .select(k ++ Seq(col("__pos"),
+        (col("__s").cast("double") / col("__n")).as("__m"), col("__n")): _*)
+      .groupBy(k: _*)
+      .agg(max(col("__n")).as("__n"),
+        array_sort(collect_list(struct(col("__pos"), col("__m")))).as("__pm"))
+      .select(k ++ Seq(col("__n"),
+        transform(col("__pm"), s => s.getField("__m")).as("__mean")): _*)
+  }
 
   /** Unit-normalize a vector (float or double elements): the norm is
     * a sequential left fold of squares — the same evaluation order as
@@ -632,13 +648,11 @@ object EmbeddingSearch {
     * Scale: assignment is a broadcast of k centroid vectors against a
     * single corpus scan (k·dim multiply-adds per row); the mean is one
     * (cell, dim)-keyed aggregation, partial-aggregated map-side —
-    * k·dim groups total, no corpus-proportional state. Each Lloyd
-    * round's centroids are cut from their lineage with a
-    * `localCheckpoint` (the [[DedupClusters]] discipline): without the
-    * barrier round N's job re-executes rounds 1..N-1's full
-    * assignment lineage — quadratic total work in `iters`. With it,
-    * round N reads round N-1's k materialized rows and total work is
-    * linear in `iters` (one corpus pass per round).
+    * k·dim groups total, no corpus-proportional state. The rounds run
+    * on [[Rounds]]: round N reads round N-1's centroids once, through
+    * the broadcast, so the plan grows linearly and stays one lazy
+    * query — one corpus pass per round, no eager job per round — until
+    * it outgrows the plan budget and is cut.
     *
     * Output: (cell, n_members, centroid array<double>), one row per
     * non-empty cell.
@@ -659,50 +673,25 @@ object EmbeddingSearch {
     * empty drop out (no member rows reach their aggregate).
     */
   private def lloydRefine(c: DataFrame, init: DataFrame, iters: Int): DataFrame = {
-    var cents = init
-    var prevCut: Option[GraftBridge.CutFrame] = None
-    var result: DataFrame = null
-    for (i <- 1 to iters) {
-      val wAssign = Window.partitionBy("__cid")
-        .orderBy(col("__ccos").desc, col("__ctr_id").asc)
+    val wAssign = Window.partitionBy("__cid")
+      .orderBy(col("__ccos").desc, col("__ctr_id").asc)
+    def update(cents: DataFrame): DataFrame = {
       val assigned = c.crossJoin(broadcast(cents))
         .withColumn("__ccos", cosine(col("__cvec"), col("__ctr_vec")))
         .withColumn("__rn", row_number().over(wAssign))
         .filter(col("__rn") === 1)
         .select(col("__cid"), col("__cvec"), col("__ctr_id"))
-      val dims = assigned
-        .select(col("__ctr_id"), posexplode(col("__cvec")).as(Seq("__pos", "__v")))
-        .groupBy(col("__ctr_id"), col("__pos"))
-        .agg(sum(col("__v").cast("double").cast("decimal(38,6)")).as("__s"),
-          count(lit(1)).as("__n"))
-        .select(col("__ctr_id"), col("__pos"),
-          (col("__s").cast("double") / col("__n")).as("__m"), col("__n"))
-      result = dims.groupBy(col("__ctr_id"))
-        .agg(max(col("__n")).as("n_members"),
-          array_sort(collect_list(struct(col("__pos"), col("__m")))).as("__pm"))
-        .select(col("__ctr_id").as("cell"), col("n_members"),
-          transform(col("__pm"), s => s.getField("__m")).as("centroid"))
-      // next-round centroids: means cast back to the float vector type
-      // (transform is an interpreted HOF but runs over k rows only),
-      // lineage-cut per round via a releasable persisted cut (k rows —
-      // eager materialization is trivial) with the PREVIOUS round's
-      // blocks freed immediately; skipped after the final round (unused)
-      if (i < iters) {
-        val cut = GraftBridge.persistCutFrame(
-          result.select(col("cell").as("__ctr_id"),
-            transform(col("centroid"), x => x.cast("float")).as("__ctr_vec")),
-          eager = true)
-        prevCut.foreach(_.release())
-        prevCut = Some(cut)
-        cents = cut.df
-      }
+      decimalMeans(assigned, Seq("__ctr_id"), col("__cvec"))
+        .select(col("__ctr_id").as("cell"), col("__n").as("n_members"),
+          col("__mean").as("centroid"))
     }
-    // the LAST round's cut stays persisted: the returned frame reads it
-    // lazily (releasing here would silently recompute every round on
-    // first consumption). Retention is one k-row frame — the session
-    // sweep can free it — vs the previous localCheckpoint retention of
-    // EVERY round until session end.
-    result
+    // next-round centroids: means cast back to the float vector type
+    // (transform is an interpreted HOF but runs over k rows only)
+    val cents = Rounds.run(CutFrame(init), iters - 1) { (cents, _) =>
+      update(cents).select(col("cell").as("__ctr_id"),
+        transform(col("centroid"), x => x.cast("float")).as("__ctr_vec"))
+    }
+    update(cents.df)
   }
 
   /** Embedding-cosine near-duplicate pairs (id1 < id2, cos ≥ threshold)

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftBridge.CutFrame
 import org.apache.spark.sql.functions._
 
 /** Host-level link-graph analytics — the web-graph quality prior that
@@ -41,6 +42,62 @@ import org.apache.spark.sql.functions._
   */
 object LinkGraph {
 
+  /** The distinct edge list, its out-degrees, and the two joined once —
+    * every power-iteration round reuses `eDeg`, so the (src-keyed)
+    * exchange below it is reused across rounds. */
+  private final case class HostGraph(e: DataFrame, outdeg: DataFrame, eDeg: DataFrame)
+
+  private def distinctEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(col(srcCol).cast("string").as("src"),
+        col(dstCol).cast("string").as("dst"))
+      .distinct()
+
+  private def hostGraph(edges: DataFrame, srcCol: String, dstCol: String): HostGraph = {
+    val e = distinctEdges(edges, srcCol, dstCol)
+    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
+    HostGraph(e, outdeg, e.join(outdeg, "src"))
+  }
+
+  /** Every host of the edge list `e`, plus `extra` host frames. */
+  private def hosts(e: DataFrame, extra: DataFrame*): DataFrame =
+    (Seq(e.select(col("src").as("host")), e.select(col("dst").as("host"))) ++ extra)
+      .reduce(_ unionAll _)
+      .distinct()
+
+  /** Σ x on the exact 1e-15 integer grid (see object doc). */
+  private def gridSum(x: Column): Column =
+    coalesce(sum(floor(x * lit(1.0e15))), lit(0L)).cast("double") / lit(1.0e15)
+
+  /** PageRank's reset mass: (1−d)/N + d·dm/N for every host. */
+  private def uniformReset(n: Long, damping: Double): Column =
+    lit((1.0 - damping) / n) + (lit(damping) * col("dm")) / lit(n.toDouble)
+
+  /** The power-iteration rounds shared by [[pageRank]], [[trustRank]] and
+    * [[pageRankWarm]]: r'(v) = Σ_{u→v} d·r(u)/odeg(u) + reset(v), where
+    * `reset` is an expression over the round's dangling mass `dm` and
+    * `nodes`' columns (trustRank's `p`). `nodes` carries one row per
+    * host; `cached` are released once no returned plan reads them.
+    */
+  private def rankRounds(g: HostGraph, nodes: DataFrame, init: DataFrame,
+                         iters: Int, damping: Double, reset: Column,
+                         cached: Seq[DataFrame]): DataFrame =
+    Rounds.run(CutFrame(init), iters,
+        invariants = cached.map(df => () => { df.unpersist(); () })) { (ranks, _) =>
+      val dm = ranks
+        .join(g.outdeg, ranks("host") === g.outdeg("src"), "left_anti")
+        .agg(gridSum(col("rank")).as("dm"))
+      val contrib = g.eDeg
+        .join(ranks.withColumnRenamed("host", "src"), "src")
+        .groupBy(col("dst"))
+        .agg((sum(floor(((lit(damping) * col("rank")) / col("odeg")) * lit(1.0e15)))
+          .cast("double") / lit(1.0e15)).as("csum"))
+      nodes
+        .join(contrib, nodes("host") === contrib("dst"), "left")
+        .crossJoin(broadcast(dm))
+        .select(nodes("host"), (coalesce(col("csum"), lit(0.0)) + reset).as("rank"))
+    }.df
+
   /** Deterministic PageRank over a directed host graph.
     *
     * Multi-edges are collapsed (DISTINCT src→dst) so out-degree is the
@@ -57,60 +114,13 @@ object LinkGraph {
     *         to ~1 up to the quantization grid
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85,
-               checkpoint: Boolean = true): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .distinct()
-
-    val nodes = e.select($"src".as("host"))
-      .unionAll(e.select($"dst".as("host")))
-      .distinct()
-      .cache()
+               iters: Int, damping: Double = 0.85): DataFrame = {
+    val g = hostGraph(edges, srcCol, dstCol)
+    val nodes = hosts(g.e).cache()
     val n = nodes.count() // bounded driver scalar: one row per host
     require(n > 0, "pageRank: empty edge list")
-
-    val outdeg = e.groupBy($"src").agg(count(lit(1)).as("odeg"))
-    // Join edges to out-degrees once; the loop reuses this DataFrame so
-    // the (src-keyed) exchange below it is reused across iterations.
-    val eDeg = e.join(outdeg, "src")
-
-    val base = (1.0 - damping) / n
-    val grid = 1.0e15
-    var ranks = nodes.select($"host", lit(1.0 / n).as("rank"))
-    for (_ <- 1 to iters) {
-      val dm = ranks
-        .join(outdeg, ranks("host") === outdeg("src"), "left_anti")
-        .agg((coalesce(sum(floor($"rank" * lit(grid))), lit(0L))
-          .cast("double") / lit(grid)).as("dm"))
-      val contrib = eDeg
-        .join(ranks.withColumnRenamed("host", "src"), "src")
-        .groupBy($"dst")
-        .agg((sum(floor(((lit(damping) * $"rank") / $"odeg") * lit(grid)))
-          .cast("double") / lit(grid)).as("csum"))
-      ranks = nodes
-        .join(contrib, nodes("host") === contrib("dst"), "left")
-        .crossJoin(broadcast(dm))
-        .select(nodes("host"),
-          (coalesce($"csum", lit(0.0)) +
-            (lit(base) + (lit(damping) * $"dm") / lit(n.toDouble))).as("rank"))
-      // Truncate lineage: each iteration references the previous rank
-      // vector three times (dangling mass, contributions, carry), so
-      // an unbroken plan grows ~3^iters and analysis time explodes.
-      // The rank vector is host-sized state — materializing it per
-      // iteration is the cheap side of the loop, and values are
-      // unaffected. `checkpoint = false` exists for plan audits only.
-      if (checkpoint) ranks = ranks.localCheckpoint(true)
-    }
-    // the final checkpoint materialized the rank vector, so the cached
-    // node list is releasable; without checkpoints the returned plan
-    // still reads it
-    if (checkpoint) nodes.unpersist()
-    ranks
+    rankRounds(g, nodes, nodes.select(col("host"), lit(1.0 / n).as("rank")),
+      iters, damping, uniformReset(n, damping), Seq(nodes))
   }
 
   /** Unrolled DuckDB mirror of [[pageRank]] for oracle gates: the SQL
@@ -161,8 +171,8 @@ object LinkGraph {
     *   r'(v) = (1−d)·p(v) + d·Σ_{u→v} r(u)/odeg(u) + d·(Σ_dangling r)·p(v)
     *
     * where p(v) = 1/|S| for seed hosts, 0 otherwise; r₀ = p. Same
-    * per-iteration shuffle shape, integer-grid quantization, and
-    * lineage truncation as [[pageRank]]. Seeds not present in the
+    * per-iteration shuffle shape, integer-grid quantization and round
+    * step as [[pageRank]]. Seeds not present in the
     * graph still receive reset mass (they are added as nodes), so a
     * vetted-but-unlinked host keeps a nonzero score.
     *
@@ -170,24 +180,12 @@ object LinkGraph {
     */
   def trustRank(edges: DataFrame, srcCol: String, dstCol: String,
                 seeds: DataFrame, iters: Int,
-                damping: Double = 0.85,
-                checkpoint: Boolean = true): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .distinct()
-    val seedHosts = seeds.select(seeds.columns.head)
+                damping: Double = 0.85): DataFrame = {
+    val g = hostGraph(edges, srcCol, dstCol)
+    val seedHosts = seeds
       .select(col(seeds.columns.head).cast("string").as("host"))
       .distinct()
-
-    val nodes = e.select($"src".as("host"))
-      .unionAll(e.select($"dst".as("host")))
-      .unionAll(seedHosts)
-      .distinct()
-      .cache()
+    val nodes = hosts(g.e, seedHosts).cache()
     val ns = seedHosts.count() // bounded: the vetted seed list
     require(ns > 0, "trustRank: empty seed set")
 
@@ -198,33 +196,10 @@ object LinkGraph {
       .select(nodes("host"),
         when(col("__seed").isNotNull, lit(seedP)).otherwise(lit(0.0)).as("p"))
       .cache()
-
-    val outdeg = e.groupBy($"src").agg(count(lit(1)).as("odeg"))
-    val eDeg = e.join(outdeg, "src")
-
-    val oneMinusD = 1.0 - damping
-    val grid = 1.0e15
-    var ranks = nodesP.select($"host", $"p".as("rank"))
-    for (_ <- 1 to iters) {
-      val dm = ranks
-        .join(outdeg, ranks("host") === outdeg("src"), "left_anti")
-        .agg((coalesce(sum(floor($"rank" * lit(grid))), lit(0L))
-          .cast("double") / lit(grid)).as("dm"))
-      val contrib = eDeg
-        .join(ranks.withColumnRenamed("host", "src"), "src")
-        .groupBy($"dst")
-        .agg((sum(floor(((lit(damping) * $"rank") / $"odeg") * lit(grid)))
-          .cast("double") / lit(grid)).as("csum"))
-      ranks = nodesP
-        .join(contrib, nodesP("host") === contrib("dst"), "left")
-        .crossJoin(broadcast(dm))
-        .select(nodesP("host"),
-          (coalesce($"csum", lit(0.0)) +
-            (lit(oneMinusD) * $"p" + (lit(damping) * $"dm") * $"p")).as("rank"))
-      if (checkpoint) ranks = ranks.localCheckpoint(true)
-    }
-    if (checkpoint) { nodesP.unpersist(); nodes.unpersist() }
-    ranks
+    rankRounds(g, nodesP, nodesP.select(col("host"), col("p").as("rank")),
+      iters, damping,
+      lit(1.0 - damping) * col("p") + (lit(damping) * col("dm")) * col("p"),
+      Seq(nodesP, nodes))
   }
 
   /** Unrolled DuckDB mirror of [[trustRank]]. `graphCte` must define
@@ -308,54 +283,19 @@ object LinkGraph {
   def pageRankWarm(edges: DataFrame, srcCol: String, dstCol: String,
                    stored: DataFrame, iters: Int,
                    damping: Double = 0.85): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .distinct()
-    val nodes = e.select($"src".as("host"))
-      .unionAll(e.select($"dst".as("host")))
-      .distinct()
-      .cache()
+    val g = hostGraph(edges, srcCol, dstCol)
+    val nodes = hosts(g.e).cache()
     val n = nodes.count()
     require(n > 0, "pageRankWarm: empty edge list")
 
-    val outdeg = e.groupBy($"src").agg(count(lit(1)).as("odeg"))
-    val eDeg = e.join(outdeg, "src")
-
-    val base = (1.0 - damping) / n
-    val grid = 1.0e15
     val seeded = nodes
       .join(stored.select(col("host"), col("rank").as("__stored")),
         Seq("host"), "left")
-      .select($"host", coalesce($"__stored", lit(1.0 / n)).as("rank"))
-    val tot = seeded.agg((coalesce(sum(floor($"rank" * lit(grid))), lit(0L))
-      .cast("double") / lit(grid)).as("tot"))
-    var ranks = seeded.crossJoin(broadcast(tot))
-      .select($"host", ($"rank" / $"tot").as("rank"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val dm = ranks
-        .join(outdeg, ranks("host") === outdeg("src"), "left_anti")
-        .agg((coalesce(sum(floor($"rank" * lit(grid))), lit(0L))
-          .cast("double") / lit(grid)).as("dm"))
-      val contrib = eDeg
-        .join(ranks.withColumnRenamed("host", "src"), "src")
-        .groupBy($"dst")
-        .agg((sum(floor(((lit(damping) * $"rank") / $"odeg") * lit(grid)))
-          .cast("double") / lit(grid)).as("csum"))
-      ranks = nodes
-        .join(contrib, nodes("host") === contrib("dst"), "left")
-        .crossJoin(broadcast(dm))
-        .select(nodes("host"),
-          (coalesce($"csum", lit(0.0)) +
-            (lit(base) + (lit(damping) * $"dm") / lit(n.toDouble))).as("rank"))
-        .localCheckpoint(true)
-    }
-    nodes.unpersist() // ranks is checkpointed — the node cache is done
-    ranks
+      .select(col("host"), coalesce(col("__stored"), lit(1.0 / n)).as("rank"))
+    val tot = seeded.agg(gridSum(col("rank")).as("tot"))
+    val init = seeded.crossJoin(broadcast(tot))
+      .select(col("host"), (col("rank") / col("tot")).as("rank"))
+    rankRounds(g, nodes, init, iters, damping, uniformReset(n, damping), Seq(nodes))
   }
 
   /** Mutually-linked host pairs: (a, b) with a→b AND b→a, a < b.
@@ -405,46 +345,31 @@ object LinkGraph {
     *
     * Shuffle shape per iteration: two host-keyed hash aggregates over
     * the (distinct) edge list joined to a host-sized score vector —
-    * no corpus row ever carries more than (host, score). Lineage is
-    * truncated per iteration exactly as in [[pageRank]].
+    * no corpus row ever carries more than (host, score). The rounds run
+    * on [[Rounds]], like [[pageRank]]'s.
     *
     * @return one row per host: (host STRING, hub DECIMAL(38,0),
     *         auth DECIMAL(38,0))
     */
-  def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
-           checkpoint: Boolean = true): DataFrame = {
+  def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 3,
       s"iters in [1, 3] (unnormalized integer scores grow as (degree^2)^iters), got $iters")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .distinct()
-    val nodes = e.select(col("src").as("host"))
-      .unionAll(e.select(col("dst").as("host")))
-      .distinct()
-      .cache()
+    val e = distinctEdges(edges, srcCol, dstCol)
+    val nodes = hosts(e).cache()
     val zero = lit(0).cast("decimal(38,0)")
-    var hub = nodes.select(col("host"), lit(1).cast("decimal(38,0)").as("hub"))
-    var auth = nodes.select(col("host"), zero.as("auth"))
-    for (_ <- 1 to iters) {
-      val aSum = e.join(hub.withColumnRenamed("host", "src"), "src")
+    val init = nodes.select(col("host"),
+      lit(1).cast("decimal(38,0)").as("hub"), zero.as("auth"))
+    Rounds.run(CutFrame(init), iters,
+        invariants = Seq(() => nodes.unpersist())) { (scores, _) =>
+      val aSum = e.join(scores.select(col("host").as("src"), col("hub")), "src")
         .groupBy(col("dst")).agg(sum(col("hub")).as("__a"))
-      auth = nodes.join(aSum, nodes("host") === aSum("dst"), "left")
+      val auth = nodes.join(aSum, nodes("host") === aSum("dst"), "left")
         .select(nodes("host"), coalesce(col("__a"), zero).as("auth"))
       val hSum = e.join(auth.withColumnRenamed("host", "dst"), "dst")
         .groupBy(col("src")).agg(sum(col("auth")).as("__h"))
-      hub = nodes.join(hSum, nodes("host") === hSum("src"), "left")
-        .select(nodes("host"), coalesce(col("__h"), zero).as("hub"))
-      if (checkpoint) {
-        auth = auth.localCheckpoint(true)
-        hub = hub.localCheckpoint(true)
-      }
-    }
-    // the final checkpoints materialized hub/auth, so the cached node
-    // list is no longer referenced; without checkpoints (plan audits)
-    // the returned plan still reads it, so it must stay cached
-    if (checkpoint) nodes.unpersist()
-    hub.join(auth, "host")
+      auth.join(hSum, auth("host") === hSum("src"), "left")
+        .select(auth("host"), coalesce(col("__h"), zero).as("hub"), auth("auth"))
+    }.df
   }
 
   /** Unrolled DuckDB mirror of [[hits]] for oracle gates — generated
@@ -503,46 +428,25 @@ object LinkGraph {
     * @return (host STRING, depth BIGINT), depth ∈ [0, maxDepth]
     */
   def seedDistance(edges: DataFrame, srcCol: String, dstCol: String,
-                   seeds: DataFrame, maxDepth: Int,
-                   checkpoint: Boolean = true): DataFrame = {
+                   seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 30,
       s"maxDepth in [1, 30] (each round is a shuffle; real crawl caps are single digits), got $maxDepth")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .distinct()
-    var dist = seeds.select(seeds.columns.head)
+    val e = distinctEdges(edges, srcCol, dstCol)
+    val seedRows = seeds
       .select(col(seeds.columns.head).cast("string").as("host"))
       .distinct()
       .withColumn("depth", lit(0L))
-    if (checkpoint) dist = dist.localCheckpoint(true)
-    var frontier = dist
-    var depth = 1L
-    var done = false
-    while (!done && depth <= maxDepth) {
-      // hosts first reached THIS round: frontier's successors minus
-      // everything already settled (left_anti on the reached set)
-      var newly = e.join(frontier.withColumnRenamed("host", "src"), "src")
-        .select(col("dst").as("host")).distinct()
-        .join(dist, Seq("host"), "left_anti")
-        .withColumn("depth", lit(depth))
-      if (checkpoint) {
-        newly = newly.localCheckpoint(true)
-        // early exit when a round reaches nothing — the emptiness
-        // probe is one count over the MATERIALIZED frontier. Without
-        // checkpoints (the plan-audit / pure-lazy mode) a probe would
-        // re-execute the whole uncheckpointed lineage once per round,
-        // so there the loop just runs its fixed maxDepth rounds.
-        if (newly.isEmpty) done = true
-      }
-      if (!done) {
-        dist = dist.unionByName(newly)
-        if (checkpoint) dist = dist.localCheckpoint(true)
-        frontier = newly
-        depth += 1L
-      }
-    }
-    dist
+    Rounds.run(CutFrame(seedRows), maxDepth, Rounds.Until.NoNewRows) { (dist, depth) =>
+      // hosts first reached THIS round: the previous round's frontier's
+      // successors minus everything already settled (left_anti on the
+      // reached set)
+      val frontier = dist.filter(col("depth") === depth - 1L)
+      dist.unionByName(
+        e.join(frontier.select(col("host").as("src")), "src")
+          .select(col("dst").as("host")).distinct()
+          .join(dist, Seq("host"), "left_anti")
+          .withColumn("depth", lit(depth.toLong)))
+    }.df
   }
 
   /** Unrolled DuckDB mirror of [[seedDistance]]: `edgesCte` must

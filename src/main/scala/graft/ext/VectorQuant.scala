@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.GraftBridge.CutFrame
 import org.apache.spark.sql.functions._
 
 /** Vector compression for ANN serving state — the 100 TB memory bill.
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    (sub, code); sums go through DECIMAL(38,6) (order-invariant →
   *    partition-invariant, the [[EmbeddingSearch.kmeansCentroids]]
   *    discipline). Codebooks are bounded driver state (m·ksub rows —
-  *    the BPE merge-table contract), lineage-cut per round.
+  *    the BPE merge-table contract); the rounds run on [[Rounds]].
   *  - ENCODE: broadcast the codebook, `min(struct(d2, code))` partial
   *    aggregation — map-side combine, no window sort, never more than
   *    one shuffle of n·m grouped rows.
@@ -118,33 +119,17 @@ object VectorQuant {
       .withColumn("code", row_number().over(w).cast("int") - 1)
       .filter(col("code") < ksub)
       .select(col("sub"), col("code"), col("centroid"))
-    var book = init
-    var prevCut: Option[GraftBridge.CutFrame] = None
-    for (i <- 1 to iters) {
-      val assigned = assignCodes(sv, book)
+    // centroids keep the INPUT element type: float corpora get float
+    // codebooks (unchanged), double corpora (the residual-quantization
+    // stage-2 path) keep full double precision
+    val elemType = sv.schema("__sv").dataType
+      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+    val book = Rounds.run(CutFrame(init), iters) { (book, _) =>
       // per-(sub, code, dim) decimal means — the kmeansCentroids
       // update, generalized to m subspaces in one aggregation
-      val dims = assigned
-        .select(col("__sub"), col("__code"),
-          posexplode(col("__sv")).as(Seq("__pos", "__v")))
-        .groupBy(col("__sub"), col("__code"), col("__pos"))
-        .agg(sum(col("__v").cast("double").cast("decimal(38,6)")).as("__s"),
-          count(lit(1)).as("__n"))
-        .select(col("__sub"), col("__code"), col("__pos"),
-          (col("__s").cast("double") / col("__n")).as("__mu"))
-      // centroids keep the INPUT element type: float corpora get float
-      // codebooks (unchanged), double corpora (the residual-quantization
-      // stage-2 path) keep full double precision
-      val elemType = sv.schema("__sv").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-      val next = dims.groupBy(col("__sub"), col("__code"))
-        .agg(array_sort(collect_list(struct(col("__pos"), col("__mu")))).as("__pm"))
+      EmbeddingSearch.decimalMeans(assignCodes(sv, book), Seq("__sub", "__code"), col("__sv"))
         .select(col("__sub").as("sub"), col("__code").as("code"),
-          transform(col("__pm"), s => s.getField("__mu").cast(elemType)).as("centroid"))
-      val cut = GraftBridge.persistCutFrame(next, eager = true)
-      prevCut.foreach(_.release())
-      prevCut = Some(cut)
-      book = cut.df
+          transform(col("__mean"), x => x.cast(elemType)).as("centroid"))
     }
     // pin the trained book as a LocalRelation: the codebook is bounded
     // m·ksub driver state by contract (collectBook collects it anyway),
@@ -153,8 +138,8 @@ object VectorQuant {
     // once per consumer (encode, residual, probe: ~5 executions per
     // composed RQ gate). One collect here, job-free LocalTableScan
     // everywhere after; rows/schema preserved exactly.
-    val pinned = GraftBridge.pinLocalRelation(book)
-    prevCut.foreach(_.release())
+    val pinned = GraftBridge.pinLocalRelation(book.df)
+    book.release()
     PqCodebook(m, dsub, pinned)
   }
 

@@ -40,7 +40,7 @@ object GraftBridge {
     * Dataset.unpersist and unrecoverable if lost) — consuming the
     * frame after release merely recomputes.
     */
-  final case class CutFrame(df: Dataset[Row], release: () => Unit,
+  final case class CutFrame(df: Dataset[Row], release: () => Unit = () => (),
                             eagerCount: Option[Long] = None)
 
   /** Cut a DataFrame's lineage at the SQL layer with RELEASABLE
@@ -115,6 +115,27 @@ object GraftBridge {
       rdd.unpersist(blocking = false); ()
     }, eagerCount)
   }
+
+  /** A private clone of `spark` with `conf` on top of its settings:
+    * frames bound to it ([[rebind]]) plan and run under these values
+    * while the caller's session, and any query another thread plans on
+    * it, never sees them. Shares the SparkContext and cache manager.
+    */
+  def scopedSession(spark: SparkSession, conf: Map[String, String]): SparkSession = {
+    val clone = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    conf.foreach { case (k, v) => clone.sessionState.conf.setConfString(k, v) }
+    clone
+  }
+
+  /** `df`'s analyzed plan as a frame of `spark`, planned and run under
+    * that session's conf from here on; the rows are unchanged. */
+  def rebind(df: Dataset[Row], spark: SparkSession): Dataset[Row] =
+    if (df.sparkSession eq spark) df
+    else {
+      val s = spark.asInstanceOf[classic.SparkSession]
+      s.withActive(classic.Dataset.ofRows(s,
+        df.asInstanceOf[classic.Dataset[Row]].logicalPlan))
+    }
 
   /** [[persistCutFrame]] without the handle — for one-shot barriers
     * whose blocks are released by the session-level sweep

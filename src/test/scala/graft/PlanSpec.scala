@@ -438,7 +438,7 @@ class PlanSpec extends SparkTestBase {
       .select(col("source").as("src"),
         concat(lit("h"), (col("doc_id") % 7).cast("string")).as("dst"))
     val p = plan(graft.ext.LinkGraph.pageRank(e, "src", "dst",
-      iters = 1, damping = 0.85, checkpoint = false))
+      iters = 1, damping = 0.85))
     // the per-dst contribution sum combines map-side — at web scale the
     // reduce side sees one partial row per (task, dst), not one per edge
     assert(p.contains("partial_"), p)
@@ -458,7 +458,7 @@ class PlanSpec extends SparkTestBase {
     import spark.implicits._
     val seeds = Seq("src0", "src1").toDF("host")
     val p = plan(graft.ext.LinkGraph.trustRank(e, "src", "dst", seeds,
-      iters = 1, damping = 0.85, checkpoint = false))
+      iters = 1, damping = 0.85))
     assert(p.contains("partial_"), p)
     assert(p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)

@@ -64,6 +64,42 @@ class DedupClustersSpec extends SparkTestBase {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == parts0)
   }
 
+  test("star rounds leave the caller's session adaptive: a concurrent query never sees AQE off") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch}
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.functions.col
+    val chain = pairs((1L until 800L).map(i => i -> (i + 1)): _*)
+    val done = new AtomicBoolean(false)
+    val started = new CountDownLatch(1)
+    val seen = ConcurrentHashMap.newKeySet[String]()
+    val polls, nonAdaptive = new AtomicInteger(0)
+    val poller = new Thread(() => {
+      while (!done.get) {
+        seen.add(spark.conf.get("spark.sql.adaptive.enabled"))
+        val plan = spark.range(100).groupBy((col("id") % 7).as("k")).count()
+          .queryExecution.executedPlan
+        if (!plan.isInstanceOf[AdaptiveSparkPlanExec]) nonAdaptive.incrementAndGet()
+        polls.incrementAndGet()
+        started.countDown()
+      }
+    })
+    poller.start()
+    val rounds =
+      try {
+        started.await()
+        val (labels, r) = DedupClusters.componentsWithRounds(chain)
+        assert(labels.filter($"component" =!= 1L).count() == 0L)
+        r
+      } finally { done.set(true); poller.join() }
+    assert(rounds > 1, s"the chain should take several rounds, took $rounds")
+    assert(polls.get > 0)
+    assert(!seen.contains("false"),
+      s"the caller's session read spark.sql.adaptive.enabled=false during CC: $seen")
+    assert(nonAdaptive.get == 0,
+      s"${nonAdaptive.get} of ${polls.get} concurrent plans were not adaptive")
+  }
+
   test("disjoint components keep separate min labels") {
     val out = DedupClusters.connectedComponents(pairs(10L -> 11L, 12L -> 11L, 20L -> 21L))
       .orderBy("id").as[(Long, Long)].collect().toSeq
