@@ -296,10 +296,11 @@ object CurationScaleCheck {
     }
 
     // ---- r12 classifier / tokenizer tier -----------------------------
-    // The hashed-ngram trainer's cost model: the text scan runs once
-    // (feature cut), each gradient pass is two hash aggregations of the
-    // narrow (doc, bucket, x) frame — so wall should grow linearly with
-    // the corpus and sub-linearly with iters' share of total. The
+    // The hashed-ngram trainer's cost model: d = 64 runs the dense
+    // layout — the text scan runs once (feature cut, one x-vector per
+    // doc), each gradient pass is one global aggregation of that cut —
+    // so wall should grow linearly with the corpus and sub-linearly
+    // with iters' share of total. The
     // unigram trainer's cost model: ONE corpus scan for word counts,
     // then vocabulary-bounded driver EM — wall should be nearly FLAT
     // across corpus sizes (the scan is the only corpus term).

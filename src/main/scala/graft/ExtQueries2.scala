@@ -232,8 +232,11 @@ object ExtQueries2 {
     * exactly the 8th hex nibble, one CASE in the oracle — so feature
     * construction, margin sums (DECIMAL(38,12)), sigmoid, gradient
     * sums (DECIMAL(38,6)), and the step arithmetic all hash-match
-    * cross-engine (the q99 discipline over a LONG-format feature
-    * frame — the shape that survives D = 2²¹). Labels are a
+    * cross-engine (the q99 discipline). At D = 16 the engine runs
+    * the dense layout (one x-vector per document); the oracle SQL
+    * spells out the LONG format, (doc, bucket, x) rows, and the two
+    * are bit-identical because absent buckets add exact decimal
+    * zeros. Labels are a
     * deterministic function of doc_id; the gate pins the FIT, not the
     * fixture's learnability (separation is measured in
     * HashedNgramSpec).

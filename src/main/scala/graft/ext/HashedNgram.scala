@@ -18,23 +18,24 @@ import org.apache.spark.sql.functions._
   * reproduces the features from the text alone. Features are
   * L1-normalized bucket counts x_j = n_j / Σn (the fastText mean).
   *
-  * Determinism discipline (the [[QualityTrain]] recipe, long-format):
-  * the per-(doc, bucket) margin terms w_j·x_j quantize to
-  * DECIMAL(38,12) before the per-document sum, and the gradient terms
-  * (σ(z)−y)·x_j to DECIMAL(38,6) before the per-bucket sum — decimal
-  * addition is exact and order-invariant, so the fit is
-  * partition-invariant and cross-engine reproducible; fixed `iters`,
-  * never a convergence test.
+  * Training is [[Logistic.descend]], the gradient kernel
+  * [[QualityTrain]] shares: gradient terms (σ(z)−y)·x_j quantize to
+  * DECIMAL(38,6) before exact, order-invariant decimal sums, so the
+  * fit is partition-invariant and cross-engine reproducible; fixed
+  * `iters`, never a convergence test. The per-(doc, bucket) margin
+  * terms w_j·x_j quantize to DECIMAL(38,12) before the per-document
+  * sum, in both feature layouts [[fit]] chooses between.
   *
-  * Scale shape: the text scan runs ONCE (features persist as a
-  * releasable cut of (doc, bucket, x) rows); each gradient pass is
-  * two hash aggregations of that narrow frame (one per-doc, one
-  * per-bucket, both map-side combined). Weights are D+1 doubles of
-  * driver state — at the gate's D=16 trivially, and the long format
-  * is exactly what scales past literal-size: at D = 2²¹ (fastText's
-  * default) the weights become a broadcast TABLE and nothing else
-  * changes, where a wide-column design ([[QualityTrain]]'s 6 fixed
-  * features) would need a 2-million-column schema.
+  * Scale shape: the text scan runs ONCE (features persist as the
+  * kernel's releasable cut). At the gates' literal-sized D each
+  * gradient pass is one global aggregation of a dense x-vector per
+  * document; past D = 64 the long format takes over, (doc, bucket, x)
+  * rows with one per-doc margin aggregation and one per-weight
+  * gradient aggregation per pass. Weights are D+1 doubles of driver
+  * state; at D = 2²¹ (fastText's default) they enter the margin as a
+  * broadcast TABLE and nothing else changes, where a wide-column
+  * design ([[QualityTrain]]'s 5 fixed features) would need a
+  * 2-million-column schema.
   */
 object HashedNgram {
 
@@ -93,37 +94,36 @@ object HashedNgram {
         pmod(MinHashLsh.portableHash32(col("__g")), lit(d.toLong)).as("bucket"))
   }
 
-  /** Fit the D+1 weights by `iters` deterministic batch-gradient
-    * steps. Returns (bucket, weight) rows: bucket −1 is the
-    * intercept, then buckets 0..D−1 (zero-gradient buckets keep
+  /** Fit the D+1 weights by `iters` batch-gradient steps of
+    * [[Logistic.descend]]. Returns (bucket, weight) rows: bucket −1 is
+    * the intercept, then buckets 0..D−1 (zero-gradient buckets keep
     * weight 0) — exactly what [[score]] consumes.
     *
-    * Two bit-identical execution paths (pinned in HashedNgramSpec):
-    * at literal-sized D (≤ 64) the features pivot to ONE dense
-    * x-vector per document and each gradient step is a single global
-    * aggregation with a row-local sigmoid — no per-iteration join,
-    * no per-doc re-aggregation, no intermediate persist (guide §2.4:
-    * the long format re-scanned a ~D·N-row cut and re-shuffled the
-    * sigmoid frame every step). Past 64 buckets the long format
-    * ([[fitLong]]) takes over — dense rows and the D-wide aggregate
-    * stop fitting codegen there, and that regime is [[fitDistributed]]'s
-    * anyway. Equality of the two paths is exact, not approximate:
-    * the margin terms quantize to DECIMAL(38,12) and gradient terms
-    * to DECIMAL(38,6) before order-invariant exact decimal sums, and
-    * the dense path's extra x=0 terms add exact decimal zeros.
+    * Two bit-identical feature layouts (pinned in HashedNgramSpec): at
+    * literal-sized D (≤ 64) the features pivot to ONE dense x-vector
+    * per document and each gradient step is a single global
+    * aggregation with a row-local sigmoid — no per-iteration join, no
+    * per-doc re-aggregation (guide §2.4: the long format re-scans a
+    * ~D·N-row cut every step). Past 64 buckets dense rows and the
+    * D-wide aggregate stop fitting codegen, and the long format
+    * ([[fitLong]]) takes over. Equality of the two is exact, not
+    * approximate: the margin terms quantize to DECIMAL(38,12) and
+    * gradient terms to DECIMAL(38,6) before order-invariant exact
+    * decimal sums, and the dense path's extra x=0 terms add exact
+    * decimal zeros.
     */
   def fit(df: DataFrame, id: Column, text: Column, label: Column,
-          d: Int = 16, iters: Int = 2, lr: Double = 0.5): Seq[(Long, Double)] =
+          d: Int = 16, iters: Int = 2, lr: Double = 0.5): Seq[(Long, Double)] = {
+    require(d >= 2 && d <= (1 << 21), s"d in [2, 2^21], got $d")
     if (d <= 64) fitDense(df, id, text, label, d, iters, lr)
     else fitLong(df, id, text, label, d, iters, lr)
+  }
 
-  /** Dense small-D gradient descent: one (doc_id, y, x[0..D)) cut,
-    * one aggregation job per iteration. Bit-identical to [[fitLong]].
+  /** Dense small-D layout: one (y, x[0..D)) cut, one aggregation per
+    * iteration. Bit-identical to [[fitLong]].
     */
   private def fitDense(df: DataFrame, id: Column, text: Column, label: Column,
                        d: Int, iters: Int, lr: Double): Seq[(Long, Double)] = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(lr > 0, s"lr must be positive, got $lr")
     val dfS = GraftBridge.spreadForMapWork(df.toDF(), id)
     // dense per-doc features in ONE aggregation from the gram stream
     // (the long path pays a second exchange + window for the per-doc
@@ -141,221 +141,91 @@ object HashedNgram {
         col(s"__c$j").cast("double") / col("__n").cast("double")): _*).as("__xs"))
     // labels join once, up front — docs with no kept tokens carry a
     // null vector (margin = intercept alone, gradient terms 0)
-    val tCut = GraftBridge.persistCutFrame(
-      dfS.select(id.as("doc_id"), label.cast("double").as("__y"))
-        .join(dense, Seq("doc_id"), "left")
-        .select(col("__y"), col("__xs")), eager = true)
-    try {
-      val n = tCut.eagerCount.getOrElse(tCut.df.count())
-      require(n > 0, "cannot fit on an empty labeled frame")
-      val nBad = tCut.df.filter(col("__y").isNull).count()
-      require(nBad == 0,
-        s"labeled frame has $nBad rows with null label — drop or impute before fit")
-      def xj(j: Int): Column = coalesce(element_at(col("__xs"), j + 1), lit(0.0))
-      val w = Array.fill(d)(0.0)
-      var w0 = 0.0
-      for (_ <- 1 to iters) {
-        // margin: the same w_j·x_j terms the long path sums per doc.
-        // Quantizing double→(20,12) rounds HALF_UP to scale 12 exactly
-        // as the long path's (38,12) cast does — precision only bounds
-        // magnitude, and |x·w| ≤ lr·iters ≪ 10^8 always fits. The
-        // partial sums re-narrow to (20,12) each add: without that the
-        // chained adds' result type outgrows precision 38 and Spark's
-        // adjustPrecisionScale silently shaves SCALE digits off the
-        // partial sums, breaking bit-identity with the long path's
-        // aggregate SUM. Each (20,12)+(20,12) add computes exactly in
-        // (21,12) before the value-preserving recast, so every step is
-        // exact decimal arithmetic.
-        val z = (0 until d).map(j =>
-          (xj(j) * lit(w(j))).cast("decimal(20,12)"))
-          .reduce((a, b) => (a + b).cast("decimal(20,12)"))
-        val p = lit(1.0) / (lit(1.0) + exp(-(lit(w0) +
-          coalesce(z.cast("double"), lit(0.0)))))
-        val gs = (0 until d).map(j =>
-          sum(((col("__p") - col("__y")) * xj(j)).cast("decimal(38,6)"))
-            .as(s"__g$j"))
-        val row = tCut.df.select(col("__y"), col("__xs"), p.as("__p"))
-          .agg(sum((col("__p") - col("__y")).cast("decimal(38,6)")).as("__gi"),
-            gs: _*)
-          .head()
-        w0 -= lr * (row.getDecimal(0).doubleValue() / n)
-        for (j <- 0 until d) {
-          val g = row.getDecimal(j + 1)
-          w(j) -= lr * ((if (g == null) 0.0 else g.doubleValue()) / n)
-        }
-      }
-      (-1L, w0) +: w.zipWithIndex.map { case (v, j) => (j.toLong, v) }.toSeq
-    } finally tCut.release()
+    val train = dfS.select(id.as("doc_id"), label.cast("double").as(Logistic.Label))
+      .join(dense, Seq("doc_id"), "left")
+      .select(col(Logistic.Label), col("__xs"))
+    val x = lit(1.0) +: (1 to d).map(j => coalesce(element_at(col("__xs"), j), lit(0.0)))
+    table(Logistic.descend(Seq(train), d + 1, iters, lr) { (cuts, w) =>
+      // margin: the same w_j·x_j terms the long path sums per doc.
+      // Quantizing double→(20,12) rounds HALF_UP to scale 12 exactly
+      // as the long path's (38,12) cast does — precision only bounds
+      // magnitude, and |x·w| ≤ lr·iters ≪ 10^8 always fits. The
+      // partial sums re-narrow to (20,12) each add: without that the
+      // chained adds' result type outgrows precision 38 and Spark's
+      // adjustPrecisionScale silently shaves SCALE digits off the
+      // partial sums, breaking bit-identity with the long path's
+      // aggregate SUM. Each (20,12)+(20,12) add computes exactly in
+      // (21,12) before the value-preserving recast, so every step is
+      // exact decimal arithmetic.
+      val z = (1 to d).map(j => (x(j) * lit(w(j))).cast("decimal(20,12)"))
+        .reduce((a, b) => (a + b).cast("decimal(20,12)"))
+      Logistic.Pass(cuts.head.withColumn(Logistic.P, Logistic.sigmoid(lit(w(0)) +
+        coalesce(z.cast("double"), lit(0.0)))), x)
+    })
   }
 
-  /** The long-format (bucket-row) gradient path — the shape that
-    * scales past literal-sized D. [[fit]] dispatches here for D > 64;
-    * kept callable so the spec pins dense ≡ long bit for bit.
+  /** Long-format layout: the (doc, bucket, x) features and the labels
+    * are two cuts, both hash-partitioned by doc_id, and each pass is
+    * [[predict]]'s per-doc margin plus one per-weight gradient
+    * aggregation. [[fit]] dispatches here for D > 64; callable so the
+    * spec pins dense ≡ long bit for bit.
     */
   private[ext] def fitLong(df: DataFrame, id: Column, text: Column, label: Column,
           d: Int = 16, iters: Int = 2, lr: Double = 0.5): Seq[(Long, Double)] = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(lr > 0, s"lr must be positive, got $lr")
-    val spark = df.sparkSession
-    import spark.implicits._
     // spread the labeled frame before the gram explode (single-file
     // local scans serialize the md5-hash map stage onto one core —
     // no-op on an already-parallel input); downstream sums are all
     // decimal-grid / exact-integer, so partitioning cannot move bits
     val dfS = GraftBridge.spreadForMapWork(df.toDF(), id)
-    // keepPartitioning: both cuts come out hash-partitioned by doc_id
-    // (features naturally, labels via the explicit repartition), so
-    // each iteration's margin groupBy(doc_id), the labels⋈margins
-    // join, and the gradient join back onto the features plan NO new
-    // corpus-proportional Exchange — the per-iteration shuffles were
-    // the dominant term of the ×100 tier reading
-    val fCut = GraftBridge.persistCutFrame(features(dfS, id, text, d),
-      eager = true, keepPartitioning = true)
-    val lCut = GraftBridge.persistCutFrame(
-      dfS.select(id.as("doc_id"), label.cast("double").as("__y"))
-        .repartition(col("doc_id")), eager = true, keepPartitioning = true)
-    try {
-      val n = lCut.df.count()
-      require(n > 0, "cannot fit on an empty labeled frame")
-      // a null label would silently skip gradient terms while n still
-      // counts the row — fail loudly (the QualityTrain discipline)
-      val nBad = lCut.df.filter(col("__y").isNull).count()
-      require(nBad == 0,
-        s"labeled frame has $nBad rows with null label — drop or impute before fit")
-      val w = Array.fill(d)(0.0)
-      var w0 = 0.0
-      for (_ <- 1 to iters) {
-        val wdf = w.zipWithIndex
-          .map { case (v, j) => (j.toLong, v) }.toSeq.toDF("bucket", "__wt")
-        val zs = fCut.df.join(broadcast(wdf), "bucket")
-          .groupBy(col("doc_id"))
-          .agg(sum((col("x") * col("__wt")).cast("decimal(38,12)")).as("__zs"))
-        val pd = lCut.df.join(zs, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("__y"),
-            (lit(1.0) / (lit(1.0) + exp(-(lit(w0) +
-              coalesce(col("__zs").cast("double"), lit(0.0)))))).as("__p"))
-        val pCut = GraftBridge.persistCutFrame(pd, eager = true,
-          keepPartitioning = true)
-        try {
-          val gi = pCut.df
-            .agg(sum((col("__p") - col("__y")).cast("decimal(38,6)")))
-            .head().getDecimal(0)
-          // shuffle-hash build on the per-doc sigmoid side: both cuts
-          // are already hash-partitioned by doc_id (no exchange), and
-          // a sort-merge join would re-SORT the corpus-proportional
-          // feature cut every iteration; hashing the doc-proportional
-          // side streams the features unsorted. Same rows either way.
-          val gb = pCut.df.hint("shuffle_hash").join(fCut.df, "doc_id")
-            .groupBy(col("bucket"))
-            .agg(sum(((col("__p") - col("__y")) * col("x"))
-              .cast("decimal(38,6)")).as("__g"))
-            .collect()
-            .map(r => r.getLong(0) -> r.getDecimal(1).doubleValue()).toMap
-          w0 -= lr * (gi.doubleValue() / n)
-          for (j <- 0 until d)
-            w(j) -= lr * (gb.getOrElse(j.toLong, 0.0) / n)
-        } finally pCut.release()
-      }
-      (-1L, w0) +: w.zipWithIndex.map { case (v, j) => (j.toLong, v) }.toSeq
-    } finally { fCut.release(); lCut.release() }
+    // both cuts come out hash-partitioned by doc_id (features
+    // naturally, labels via the explicit repartition), and the kernel
+    // keeps that partitioning on its cuts: where the plan reports it
+    // (an AQE-coalesced small cut does not), each pass's per-doc
+    // margin and joins plan no new corpus-proportional Exchange
+    val train = Seq(features(dfS, id, text, d),
+      dfS.select(id.as("doc_id"), label.cast("double").as(Logistic.Label))
+        .repartition(col("doc_id")))
+    table(Logistic.descend(train, d + 1, iters, lr) { (cuts, w) =>
+      val Seq(feats, labels) = cuts
+      val pd = predict(feats, labels, table(w))
+      // weight 0 (the intercept) takes one row per document with
+      // feature 1.0; weight bucket+1 one row per (doc, bucket). Both
+      // branches recompute pd from the cuts instead of cutting it,
+      // which would cost a job per pass. The shuffle-hash build is the
+      // per-doc side: a sort-merge join would re-SORT the
+      // corpus-proportional feature cut every pass.
+      val y = col(Logistic.Label)
+      val p = col(Logistic.P)
+      val rows = pd.select(lit(0L).as("__j"), y, p, lit(1.0).as("__x"))
+        .unionByName(pd.hint("shuffle_hash").join(feats, "doc_id")
+          .select((col("bucket") + 1L).as("__j"), y, p, col("x").as("__x")))
+      Logistic.Pass(rows, Seq(col("__x")), Some(col("__j")))
+    })
   }
 
-  /** [[fit]] with the weights kept DISTRIBUTED through training —
-    * no per-iteration collect, so D = 2²¹ (fastText's default) costs
-    * what D = 16 costs plus a bigger join side; only the FINAL model
-    * table is pinned for return (D rows of (long, double) — single-
-    * digit MBs even at 2²¹; persist it to parquet as the serving
-    * state). Each iteration:
-    * margin sums via a features⋈weights join, sigmoid against the
-    * one-row intercept frame (broadcast), per-bucket and global
-    * gradient aggregations, and a pure-join weight update; the new
-    * weight table persists as a releasable cut and the previous one
-    * releases (the [[VectorQuant.pqTrain]] round discipline). Every
-    * expression tree matches [[fit]] term for term — decimal-grid
-    * margin and gradient sums, the identical IEEE step — so the two
-    * paths produce BIT-IDENTICAL weights (pinned in HashedNgramSpec);
-    * use [[fit]] when D is literal-sized, this when it is not.
-    *
-    * Returns the (bucket, weight) frame — intercept at bucket −1 —
-    * ready to persist to parquet as model state.
+  /** The kernel's weight vector (intercept first) as (bucket, weight)
+    * rows, intercept at bucket −1. */
+  private def table(w: Seq[Double]): Seq[(Long, Double)] =
+    w.zipWithIndex.map { case (v, j) => (j - 1L, v) }
+
+  /** `docs` (doc_id plus any columns) with `__p` = σ(w0 + Σ w_j·x_j):
+    * the long `feats` join the broadcast weight table, the margin
+    * terms quantize to DECIMAL(38,12) and sum per document; a document
+    * with no feature rows scores the intercept alone. The one margin
+    * of the long-format trainer and of [[score]].
     */
-  def fitDistributed(df: DataFrame, id: Column, text: Column, label: Column,
-                     d: Int = 16, iters: Int = 2, lr: Double = 0.5): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(lr > 0, s"lr must be positive, got $lr")
-    val spark = df.sparkSession
-    // same spread + doc_id-partitioned cut discipline as [[fit]]
-    val dfS = GraftBridge.spreadForMapWork(df.toDF(), id)
-    val fCut = GraftBridge.persistCutFrame(features(dfS, id, text, d),
-      eager = true, keepPartitioning = true)
-    val lCut = GraftBridge.persistCutFrame(
-      dfS.select(id.as("doc_id"), label.cast("double").as("__y"))
-        .repartition(col("doc_id")), eager = true, keepPartitioning = true)
-    var wCut: Option[GraftBridge.CutFrame] = None
-    try {
-      val n = lCut.df.count()
-      require(n > 0, "cannot fit on an empty labeled frame")
-      val nBad = lCut.df.filter(col("__y").isNull).count()
-      require(nBad == 0,
-        s"labeled frame has $nBad rows with null label — drop or impute before fit")
-      // weights state: D bucket rows + a one-row intercept frame,
-      // both distributed
-      var weights: DataFrame = spark.range(d)
-        .select(col("id").as("bucket"), lit(0.0).as("__wt"))
-      var intercept: DataFrame = spark.range(1).select(lit(0.0).as("__w0"))
-      for (_ <- 1 to iters) {
-        val zs = fCut.df.join(weights, "bucket")
-          .groupBy(col("doc_id"))
-          .agg(sum((col("x") * col("__wt")).cast("decimal(38,12)")).as("__zs"))
-        val pd = lCut.df.join(zs, Seq("doc_id"), "left")
-          .crossJoin(broadcast(intercept))
-          .select(col("doc_id"), col("__y"),
-            (lit(1.0) / (lit(1.0) + exp(-(col("__w0") +
-              coalesce(col("__zs").cast("double"), lit(0.0)))))).as("__p"))
-        val pCut = GraftBridge.persistCutFrame(pd, eager = true,
-          keepPartitioning = true)
-        try {
-          // same shuffle-hash build reasoning as [[fit]]'s gb join
-          val gb = pCut.df.hint("shuffle_hash").join(fCut.df, "doc_id")
-            .groupBy(col("bucket"))
-            .agg(sum(((col("__p") - col("__y")) * col("x"))
-              .cast("decimal(38,6)")).as("__g"))
-          val gi = pCut.df
-            .agg(sum((col("__p") - col("__y")).cast("decimal(38,6)")).as("__g"))
-          val nextW = weights.join(gb, Seq("bucket"), "left")
-            .select(col("bucket"),
-              (col("__wt") - lit(lr) *
-                (coalesce(col("__g").cast("double"), lit(0.0)) / lit(n.toDouble)))
-                .as("__wt"))
-          val nextI = intercept.crossJoin(broadcast(gi))
-            .select((col("__w0") - lit(lr) *
-              (col("__g").cast("double") / lit(n.toDouble))).as("__w0"))
-          // one cut holds BOTH frames for the round (union-tagged), so
-          // the previous round's lineage is truncated before release
-          val tagged = nextW.select(col("bucket"), col("__wt"))
-            .unionByName(nextI.select(lit(-1L).as("bucket"), col("__w0").as("__wt")))
-          val cut = GraftBridge.persistCutFrame(tagged, eager = true)
-          wCut.foreach(_.release())
-          wCut = Some(cut)
-          weights = cut.df.filter(col("bucket") >= 0L)
-          intercept = cut.df.filter(col("bucket") === -1L)
-            .select(col("__wt").as("__w0"))
-        } finally pCut.release()
-      }
-      wCut match {
-        case Some(cut) =>
-          // pin the final table so the caller outlives the cut
-          val rows = cut.df.orderBy(col("bucket")).collect()
-          val out = spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](
-              java.util.Arrays.asList(rows: _*)), cut.df.schema)
-          out.select(col("bucket"), col("__wt").as("weight"))
-        case None => // iters >= 1 guarantees a cut; unreachable
-          spark.range(0).select(col("id").as("bucket"), lit(0.0).as("weight"))
-      }
-    } finally {
-      fCut.release(); lCut.release(); wCut.foreach(_.release())
-    }
+  private def predict(feats: DataFrame, docs: DataFrame,
+                      weights: Seq[(Long, Double)]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val w0 = weights.collectFirst { case (-1L, v) => v }.get
+    val zs = feats.join(broadcast(weights.filter(_._1 >= 0L).toDF("bucket", "__wt")), "bucket")
+      .groupBy(col("doc_id"))
+      .agg(sum((col("x") * col("__wt")).cast("decimal(38,12)")).as("__zs"))
+    docs.join(zs, Seq("doc_id"), "left")
+      .withColumn(Logistic.P, Logistic.sigmoid(lit(w0) +
+        coalesce(col("__zs").cast("double"), lit(0.0))))
+      .drop("__zs")
   }
 
   /** Persist / reload fitted weights as parquet model state. Longs
@@ -382,18 +252,14 @@ object HashedNgram {
     */
   def score(df: DataFrame, id: Column, text: Column,
             weights: Seq[(Long, Double)]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val w0 = weights.find(_._1 == -1L)
-      .getOrElse(throw new IllegalArgumentException(
-        "weights must carry the intercept row (bucket = -1)"))._2
+    require(weights.exists(_._1 == -1L),
+      "weights must carry the intercept row (bucket = -1)")
     // The hash modulus D is structural model state, not a row count
-    // (ADVICE r12): fit/fitDistributed emit dense 0..D-1 rows, so D =
-    // max bucket + 1 — and any GAP in the bucket ids (zero-weight rows
-    // dropped in persistence, or a sparse cut at the documented
-    // D = 2^21 scale) would silently change the modulus and mis-bucket
-    // every gram. Fail loudly instead of inferring from a corrupted
-    // table.
+    // (ADVICE r12): fit emits dense 0..D-1 rows, so D = max bucket + 1
+    // — and any GAP in the bucket ids (zero-weight rows dropped in
+    // persistence, or a sparse cut at the documented D = 2^21 scale)
+    // would silently change the modulus and mis-bucket every gram.
+    // Fail loudly instead of inferring from a corrupted table.
     val buckets = weights.map(_._1).filter(_ >= 0L).sorted
     require(buckets.size >= 2, s"weights must carry >= 2 bucket rows, got ${buckets.size}")
     val d = (buckets.last + 1).toInt
@@ -401,14 +267,7 @@ object HashedNgram {
       s"weights must carry a DENSE bucket range 0..${d - 1}: " +
         s"got ${buckets.size} rows (gaps change the hash modulus; " +
         "persist zero-weight rows rather than dropping them)")
-    val wdf = weights.filter(_._1 >= 0L).toDF("bucket", "__wt")
-    val zs = features(df, id, text, d).join(broadcast(wdf), "bucket")
-      .groupBy(col("doc_id"))
-      .agg(sum((col("x") * col("__wt")).cast("decimal(38,12)")).as("__zs"))
-    df.select(id.as("doc_id"))
-      .join(zs, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (lit(1.0) / (lit(1.0) + exp(-(lit(w0) +
-          coalesce(col("__zs").cast("double"), lit(0.0)))))).as("score"))
+    predict(features(df, id, text, d), df.select(id.as("doc_id")), weights)
+      .withColumnRenamed(Logistic.P, "score")
   }
 }

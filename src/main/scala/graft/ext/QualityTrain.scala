@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** In-engine trainer for [[QualityModel]]: deterministic batch-gradient
@@ -12,25 +12,21 @@ import org.apache.spark.sql.functions._
   * pipeline (fastText/C4-style quality classifiers are this shape:
   * hand few labeled docs to a linear trainer, score the corpus).
   *
-  * Determinism discipline (the [[EmbeddingSearch.kmeansCentroids]]
-  * recipe): each row's per-weight gradient contribution
-  * (σ(w·x) − y)·xⱼ is computed in IEEE double, quantized to
-  * DECIMAL(38,6), and summed EXACTLY — decimal addition is
-  * order-invariant, so the fit is partition-invariant and
+  * The descent is [[Logistic.descend]]'s (shared with
+  * [[HashedNgram.fit]]): gradient terms quantized to DECIMAL(38,6) and
+  * summed exactly, so the fit is partition-invariant and
   * cluster-reproducible (pinned by spec: repartition(2) ≡
   * repartition(7) ≡ a driver-side reference trainer, bit for bit).
-  * The dot product reuses [[QualityModel.score]]'s left-to-right fold,
-  * so training-time predictions and serving-time scores are the same
-  * IEEE expression tree.
+  * The dot product is [[QualityModel.score]]'s left-to-right fold from
+  * the intercept, so training-time predictions and serving-time scores
+  * are the same IEEE expression tree.
   *
-  * Scale design: the text scan runs ONCE — features materialize into a
-  * releasable persisted cut (6 doubles + label per row), and each of
-  * the `iters` gradient passes is one partial-aggregated scan of that
-  * narrow frame (6 decimal sums, map-side combined; bytes per
-  * executor-partition, 6 values to the driver per pass). Weights are
-  * bounded driver state (6 doubles — the BPE merge-table contract).
-  * Labeled sets are sample-sized by nature; nothing here touches the
-  * unlabeled corpus.
+  * Scale design: the text scan runs ONCE — the 5 features and the
+  * label are the kernel's cut, and each of the `iters` gradient passes
+  * is one partial-aggregated scan of that narrow frame (6 decimal
+  * sums, map-side combined). Weights are bounded driver state (6
+  * doubles — the BPE merge-table contract). Labeled sets are
+  * sample-sized by nature; nothing here touches the unlabeled corpus.
   */
 object QualityTrain {
 
@@ -41,9 +37,7 @@ object QualityTrain {
     * @param text   text column (featurized by [[QualityModel.features]])
     * @param label  0/1 label column (castable to double)
     * @param iters  fixed gradient steps — part of the reproducibility
-    *               contract (no tolerance-based early stop: two engines
-    *               disagreeing on the last ulp of a convergence test
-    *               would diverge in ROUNDS, not ulps)
+    *               contract (no tolerance-based early stop)
     * @param lr     learning rate
     * @return (name, weight) rows — "intercept" first, then
     *         [[QualityModel.featureNames]] order; exactly what
@@ -51,44 +45,17 @@ object QualityTrain {
     */
   def fit(df: DataFrame, text: Column, label: Column,
           iters: Int = 50, lr: Double = 0.5): Seq[(String, Double)] = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(lr > 0, s"lr must be positive, got $lr")
-    val nFeat = QualityModel.featureNames.length + 1 // + intercept slot f0 = 1
-    val featFrame = df.select(
-      (lit(1.0).as("f0") +:
-        QualityModel.features(text).zipWithIndex.map { case (c, i) => c.as(s"f${i + 1}") }) :+
-        label.cast("double").as("__y"): _*)
-    // one text scan total: the iteration loop reads this narrow frame
-    val cut = GraftBridge.persistCutFrame(featFrame, eager = true)
-    try {
-      val n = cut.df.count()
-      require(n > 0, "cannot fit on an empty labeled frame")
-      // null text or label would silently skip gradient terms while n
-      // still counts the row (a stealth learning-rate shrink no
-      // reference trainer reproduces) — fail loudly instead, the
-      // module's determinism discipline
-      val nBad = cut.df.filter(
-        (0 until nFeat).map(j => col(s"f$j").isNull)
-          .foldLeft(col("__y").isNull)(_ || _)).count()
-      require(nBad == 0,
-        s"labeled frame has $nBad rows with null text/label — drop or impute before fit")
-      val w = Array.fill(nFeat)(0.0)
-      for (_ <- 1 to iters) {
-        // w·x with the same left-to-right fold as QualityModel.score
-        // (f0 ≡ 1.0, and w0·1.0 == w0 in IEEE, so the trees agree)
-        val z = (0 until nFeat)
-          .map(j => lit(w(j)) * col(s"f$j"))
-          .reduceLeft(_ + _)
-        val p = lit(1.0) / (lit(1.0) + exp(-z))
-        val grads = cut.df.select((0 until nFeat).map(j =>
-          sum(((p - col("__y")) * col(s"f$j")).cast("decimal(38,6)")).as(s"g$j")): _*)
-          .head()
-        for (j <- 0 until nFeat)
-          w(j) -= lr * (grads.getDecimal(j).doubleValue / n)
+    val names = QualityModel.featureNames
+    val train = df.select(QualityModel.features(text).zip(names)
+      .map { case (c, name) => c.as(name) } :+ label.cast("double").as(Logistic.Label): _*)
+    // the intercept's feature is the constant 1.0
+    val x = lit(1.0) +: names.map(col)
+    val w = Logistic.descend(Seq(train), x.length, iters, lr) { (cuts, w) =>
+      val z = x.tail.zip(w.tail).foldLeft(lit(w(0))) {
+        case (acc, (f, wj)) => acc + lit(wj) * f
       }
-      ("intercept" -> w(0)) +: QualityModel.featureNames.zipWithIndex.map {
-        case (name, i) => name -> w(i + 1)
-      }
-    } finally cut.release()
+      Logistic.Pass(cuts.head.withColumn(Logistic.P, Logistic.sigmoid(z)), x)
+    }
+    ("intercept" +: names).zip(w)
   }
 }

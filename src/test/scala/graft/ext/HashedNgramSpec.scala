@@ -25,13 +25,16 @@ class HashedNgramSpec extends SparkTestBase {
     .toDF("doc_id", "text", "label")
 
   test("fit weights shape and determinism across partitionings") {
-    val a = HashedNgram.fit(labeled.repartition(1), $"doc_id", $"text",
-      $"label", d = 16, iters = 2)
-    val b = HashedNgram.fit(labeled.repartition(7), $"doc_id", $"text",
-      $"label", d = 16, iters = 2)
-    assert(a == b)
-    assert(a.length == 17 && a.head._1 == -1L)
-    assert(a.map(_._1) == (-1L +: (0L until 16L)))
+    // d = 16 runs the dense layout, d = 128 the long format
+    Seq(16, 128).foreach { d =>
+      val a = HashedNgram.fit(labeled.repartition(1), $"doc_id", $"text",
+        $"label", d = d, iters = 2)
+      val b = HashedNgram.fit(labeled.repartition(7), $"doc_id", $"text",
+        $"label", d = d, iters = 2)
+      assert(a == b)
+      assert(a.length == d + 1 && a.head._1 == -1L)
+      assert(a.map(_._1) == (-1L +: (0L until d.toLong)))
+    }
   }
 
   test("score serves the trainer's own expression tree") {
@@ -72,16 +75,6 @@ class HashedNgramSpec extends SparkTestBase {
     assert(hashedSep > 0.2, s"hashed separation too small: $hashedSep")
     assert(hashedSep > engineeredSep + 0.1,
       s"hashed ($hashedSep) should beat engineered ($engineeredSep) on vocabulary-only spam")
-  }
-
-  test("fitDistributed == fit bit for bit (the D=2^21 path against the literal path)") {
-    val driver = HashedNgram.fit(labeled, $"doc_id", $"text", $"label",
-      d = 16, iters = 3, lr = 0.5)
-    val dist = HashedNgram.fitDistributed(labeled, $"doc_id", $"text", $"label",
-      d = 16, iters = 3, lr = 0.5)
-      .as[(Long, Double)].collect().sortBy(_._1).toSeq
-    assert(dist == driver.sortBy(_._1),
-      s"distributed=${dist}\ndriver=${driver.sortBy(_._1)}")
   }
 
   test("dense small-D fit == long-format fit bit for bit (including empty-gram docs)") {
@@ -139,5 +132,13 @@ class HashedNgramSpec extends SparkTestBase {
       HashedNgram.fit(bad, $"doc_id", $"text", $"label", d = 16, iters = 1)
     }
     assert(e.getMessage.contains("null label"))
+  }
+
+  test("fit checks the bucket count on both layouts") {
+    Seq(1, 0, (1 << 21) + 1).foreach { d =>
+      intercept[IllegalArgumentException] {
+        HashedNgram.fit(labeled, $"doc_id", $"text", $"label", d = d, iters = 1)
+      }
+    }
   }
 }

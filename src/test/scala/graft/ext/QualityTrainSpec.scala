@@ -92,11 +92,32 @@ class QualityTrainSpec extends SparkTestBase {
   }
 
   test("fit releases the feature-frame storage it allocated") {
+    // GraftBridge.trackCuts attributes cuts to this thread's call, so
+    // other suites' frames on the shared context cannot race the check
     val sc = spark.sparkContext
-    val baseline = sc.getPersistentRDDs.size
-    QualityTrain.fit(labeled, $"text", $"label", iters = 3)
-    assert(sc.getPersistentRDDs.size <= baseline,
-      "trainer must release its persisted feature frame")
+    val withNullLabel = labeled.unionByName(
+      Seq((9L, "some text here", null.asInstanceOf[Integer]))
+        .toDF("doc_id", "text", "label"))
+    val fits: Seq[(String, () => Any)] = Seq(
+      "QualityTrain.fit" -> (() => QualityTrain.fit(labeled, $"text", $"label", iters = 3)),
+      "HashedNgram.fit d=16" -> (() =>
+        HashedNgram.fit(labeled, $"doc_id", $"text", $"label", d = 16, iters = 2)),
+      "HashedNgram.fit d=128" -> (() =>
+        HashedNgram.fit(labeled, $"doc_id", $"text", $"label", d = 128, iters = 2)),
+      "QualityTrain.fit, null label" -> (() =>
+        intercept[IllegalArgumentException] {
+          QualityTrain.fit(withNullLabel, $"text", $"label", iters = 2)
+        }),
+      "HashedNgram.fit d=128, null label" -> (() =>
+        intercept[IllegalArgumentException] {
+          HashedNgram.fit(withNullLabel, $"doc_id", $"text", $"label", d = 128, iters = 2)
+        }))
+    fits.foreach { case (name, fit) =>
+      val (_, mine) = org.apache.spark.sql.GraftBridge.trackCuts(fit())
+      assert(mine.nonEmpty, s"$name: the fit should cut its training frame")
+      assert((sc.getPersistentRDDs.keySet.toSet & mine).isEmpty,
+        s"$name: the trainer must release every cut it persisted")
+    }
   }
 
   test("empty and degenerate inputs fail loudly") {
