@@ -87,8 +87,8 @@ object Bench {
         .filter($"id" < $"id2")
         .agg(sum(size($"sig") + size($"s") + $"rn")).collect()
     } catch { case NonFatal(e) => System.err.println(s"[bench] warmup(ops) failed: $e") }
-    // Between timed queries: drop RDD blocks left behind by
-    // localCheckpoint-based operators (LSH candidate sets, CC rounds).
+    // Between timed queries: drop RDD blocks left behind by the
+    // operators' lineage cuts (LSH candidate sets, CC rounds).
     // Dataset.unpersist cannot free those (plan-level only), so without
     // this they accumulate across the ~60-query run and later queries
     // pay their GC pressure — r3 vs r4 showed identical code swinging

@@ -4,6 +4,7 @@ import graft.CoreQueries.Q
 import graft.ExtQueries3.{cjk, cyr, greek, latticeIterBlock, latticeSeedCtes,
   latticeViterbiCtes, sparkPick, sqlPick, MaxLen}
 import graft.ext.UnigramLm
+import org.apache.spark.sql.GraftBridge.persistCut
 
 /** Round-14 extension gates (q213+): MULTILINGUAL lattice unigram-LM
   * training — the byte-symbol lift of the q198 trainer (VERDICT r13
@@ -389,6 +390,15 @@ object ExtQueries4 {
           concat($"text", lit(" chain tail one two")).as("text"), $"source")
       val docs = base.unionAll(rep).unionAll(ch1).unionAll(ch2)
 
+      // Each stage cut below drops its lineage (localCheckpoint), unlike
+      // a GraftBridge cut: every stage feeds the next, so cuts that kept
+      // their lineage would pin all earlier stages' plans and broadcast
+      // hash relations on the driver until the final collect (measured
+      // on the corpus_build benchmark: live-heap peak 170 → 210-255 MB;
+      // the cascade's two string-keyed broadcasts hold a 16 MB page
+      // each). A lost stage block fails the build instead of
+      // recomputing.
+
       // stage 1 — WARC round-trip: the ingest face (q112's machinery)
       val rec = Warc.recordBytes(
         concat(lit("urn:graft:doc:"), $"doc_id"),
@@ -649,21 +659,19 @@ object ExtQueries4 {
       // stage 1 — per-row quality bounds (the cascade's word_bounds)
       val nw = size(filter(split(lower(trim($"text")), "\\s+"),
         w => w =!= lit(""))).cast("long")
-      val qual = batch.filter(nw >= 5L && nw <= 100000L)
-        .localCheckpoint(false)
+      val qual = persistCut(batch.filter(nw >= 5L && nw <= 100000L))
 
       // stage 2 — exact dedup vs the stored digest ledger
-      val exact = ExactDedup.incremental(qual, corpus, $"text", "doc_id")
-        .localCheckpoint(false)
+      val exact = persistCut(
+        ExactDedup.incremental(qual, corpus, $"text", "doc_id"))
 
       // stage 3 — near-dup probe against stored signatures
       val sigs = MinHashLsh.portableSignatures(corpus, $"doc_id", $"text",
         n = 3, k = 8)
       val hits = MinHashLsh.incrementalNearDup(exact, $"doc_id", $"text",
         sigs, n = 3, k = 8, bands = 4, threshold = 0.5)
-      val admitted = exact.join(hits.select($"new_id".as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-        .localCheckpoint(false)
+      val admitted = persistCut(exact.join(
+        hits.select($"new_id".as("doc_id")).distinct(), Seq("doc_id"), "left_anti"))
 
       // manifest admission: stored manifest + the admitted batch
       val w = TextAnalysis.charCount($"text")
@@ -1047,10 +1055,9 @@ object ExtQueries4 {
       import org.apache.spark.sql.functions._
       import graft.ext.{Forget, MinHashLsh, Sharding}
       val docs = t(s, dir, "documents").select($"doc_id", $"text")
-      val corpus = docs.unionAll(docs.filter($"doc_id" < 10)
-          .select(($"doc_id" + 960001L).as("doc_id"), $"text"))
-        .localCheckpoint(false)
-      val del = corpus.filter($"doc_id" % 10 === 7).localCheckpoint(false)
+      val corpus = persistCut(docs.unionAll(docs.filter($"doc_id" < 10)
+          .select(($"doc_id" + 960001L).as("doc_id"), $"text")))
+      val del = persistCut(corpus.filter($"doc_id" % 10 === 7))
 
       val dgRet = Forget.retractDigests(
         Forget.digestCounts(corpus, $"text"), del, $"text")
@@ -1647,8 +1654,8 @@ object ExtQueries4 {
             .otherwise($"text").as("text"))
         .unionAll(extra)
       // the diff is the loop's front door; three stages reuse it
-      val diff = CorpusDiff.snapshotDiff(before, after, "doc_id", "text")
-        .localCheckpoint(false)
+      val diff = persistCut(
+        CorpusDiff.snapshotDiff(before, after, "doc_id", "text"))
       val r1 = diff.groupBy($"status").agg(count(lit(1)).as("n_rows"),
           sum($"doc_id").as("checksum"))
         .select(when($"status" === "added", 1L)

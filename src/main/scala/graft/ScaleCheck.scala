@@ -134,7 +134,7 @@ object ScaleCheck {
     // invocations. Ten releasable runs; the persisted-RDD count after
     // each release must return to its pre-loop baseline (the round-7
     // localCheckpoint design accumulated rounds×frames per invocation
-    // with no way to free them short of session teardown).
+    // until a sweep of the persistent RDDs).
     {
       val sc = spark.sparkContext
       val pairs = spark.range(0L, 20000L)

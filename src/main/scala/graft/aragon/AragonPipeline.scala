@@ -69,7 +69,9 @@ object AragonPipeline {
     * metrics) silently re-deduplicates against the run's own output
     * (read-your-own-writes). localCheckpoint materializes the key set
     * once, up front; key snapshots are small (keys only) even when the
-    * target is huge.
+    * target is huge. A localCheckpoint, not a GraftBridge cut: its
+    * dropped lineage IS the isolation — a lost key block must fail the
+    * load, not recompute against the run's own appends.
     */
   private def snapshot(df: DataFrame): DataFrame = df.localCheckpoint(true)
 

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -87,10 +87,9 @@ object Containment {
 
     // one exploded frame, three consumers (df counts, prefix window,
     // index side) — materialize once or each consumer replans the
-    // scan+explode subtree (the ShingleJaccard/MinHashLsh barrier
-    // pattern; retention caveat documented there applies)
-    val sh = df.select(id.as("__id"), explode(shingler(text, n)).as("__sh"))
-      .localCheckpoint(false)
+    // scan+explode subtree (the ShingleJaccard/MinHashLsh barrier)
+    val sh = GraftBridge.persistCut(
+      df.select(id.as("__id"), explode(shingler(text, n)).as("__sh")))
 
     val dfc = sh.groupBy("__sh").agg(count(lit(1)).as("__df"))
 

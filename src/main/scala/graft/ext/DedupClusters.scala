@@ -58,16 +58,15 @@ object DedupClusters {
     *         graphs far beyond 2^30 nodes; non-convergence indicates a
     *         bug or corrupted input, not a tuning problem).
     *
-    * Retention note: each round runs under a RELEASABLE persisted
+    * Retention note: each round runs under a releasable persisted
     * lineage cut ([[GraftBridge.persistCutFrame]] — plans stay
-    * constant-size like localCheckpoint, blocks releasable unlike it);
-    * round N-1's blocks are freed as soon as round N materializes, so
-    * in-flight retention is O(1) frames, not O(rounds). What survives
-    * the call is the node set + final star edges backing the returned
-    * labels — [[connectedComponentsReleasable]] hands back the release
-    * for those; the plain entry point leaves them to the session-level
-    * sweep (sparkContext.getPersistentRDDs unpersist), which CAN free
-    * them.
+    * constant-size, and a freed block is recomputed); round N-1's
+    * blocks are freed as soon as round N materializes, so in-flight
+    * retention is O(1) frames, not O(rounds). What survives the call
+    * is the node set + final star edges backing the returned labels —
+    * [[connectedComponentsReleasable]] hands back the release for
+    * those; the plain entry point leaves them to the session-level
+    * sweep (sparkContext.getPersistentRDDs unpersist).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame =
     componentsWithRounds(pairs, maxIter)._1
@@ -104,9 +103,9 @@ object DedupClusters {
     // subtree (LSH banding over the corpus in every cluster gate)
     // TWICE. Cut the raw list once, derive both, release the raw cut.
     // EXCEPT when the pair plan is already cheap to traverse twice —
-    // a materialized leaf (the composed gates hand in localCheckpoint
-    // frames) or a plain scan: an extra eager cut there is pure
-    // overhead (measured +1.2 s on q215).
+    // a materialized leaf (the composed gates hand in cut frames) or a
+    // plain scan: an extra eager cut there is pure overhead (measured
+    // +1.2 s on q215).
     val pairPlanHeavy = {
       import org.apache.spark.sql.catalyst.plans.logical._
       pairs.queryExecution.optimizedPlan.collectFirst {

@@ -164,11 +164,10 @@ object EmbeddingSearch {
     require(k >= 1, s"k must be >= 1, got $k")
     val wS = Window.partitionBy("__sid").orderBy(col("cos").desc, col("__tid"))
     val wT = Window.partitionBy("__tid").orderBy(col("cos").desc, col("__sid"))
-    val ranked = pairs
+    val ranked = GraftBridge.persistCut(pairs
       .select(col("src_id").as("__sid"), col("tgt_id").as("__tid"), col("cos"))
       .withColumn("__rs", row_number().over(wS))
-      .withColumn("__rt", row_number().over(wT))
-      .localCheckpoint(false)
+      .withColumn("__rt", row_number().over(wT)))
     // no raise here: the guard applies AFTER the mutual-best join, so
     // only endpoints a surviving pair depends on can abort the job
     def avgK(key: String, rank: String, as: String, n: String): DataFrame =
@@ -784,9 +783,8 @@ object EmbeddingSearch {
     // renamed projections, so without a barrier both re-execute the
     // signature+norm subtree (and the scan under it) over the full
     // corpus. The barrier is a releasable persisted lineage cut — a
-    // sweep of sparkContext.getPersistentRDDs can free its blocks
-    // (unlike localCheckpoint blocks, which only session teardown
-    // frees), and recomputation stays possible after release.
+    // sweep of sparkContext.getPersistentRDDs frees its blocks, and a
+    // freed block is recomputed.
     val sig = GraftBridge.persistCut(
       aliased(df, id, vec, "__cid", "__cvec")
         .withColumn("__sig", srpSignature(col("__cvec"), bits * bands))

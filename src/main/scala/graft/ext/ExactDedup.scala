@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Exact (full-content) deduplication for document corpora.
@@ -115,8 +115,8 @@ object ExactDedup {
     // two consumers of the per-(digest, source) aggregate — same
     // materialize-once discipline as the shingle frames (the frame is
     // digest + source + count, compact at any corpus size)
-    overlapFromState(sourcePresenceState(df, content, source)
-      .localCheckpoint(false))
+    overlapFromState(GraftBridge.persistCut(
+      sourcePresenceState(df, content, source)))
 
   /** The maintained STATE behind [[crossSourceOverlap]]: one row per
     * (content digest, source) with its row count — the same counted-

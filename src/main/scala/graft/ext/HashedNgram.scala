@@ -178,10 +178,11 @@ object HashedNgram {
     // decimal-grid / exact-integer, so partitioning cannot move bits
     val dfS = GraftBridge.spreadForMapWork(df.toDF(), id)
     // both cuts come out hash-partitioned by doc_id (features
-    // naturally, labels via the explicit repartition), and the kernel
-    // keeps that partitioning on its cuts: where the plan reports it
-    // (an AQE-coalesced small cut does not), each pass's per-doc
-    // margin and joins plan no new corpus-proportional Exchange
+    // naturally, labels via the explicit repartition), and the cut
+    // leaf carries that partitioning where the executed plan reports
+    // it. A cut whose last stage is an AQE-coalesced shuffle read
+    // reports UnknownPartitioning, and then each pass re-exchanges
+    // both cuts by doc_id
     val train = Seq(features(dfS, id, text, d),
       dfS.select(id.as("doc_id"), label.cast("double").as(Logistic.Label))
         .repartition(col("doc_id")))

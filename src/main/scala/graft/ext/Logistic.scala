@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * hands over its training frames and writes one gradient pass as a
   * function of the current weights; `Logistic` owns the rest. Contract:
   *   - Cuts. Each training frame (label column [[Label]]) is cut once,
-  *     lazily and with its partitioning kept
-  *     ([[GraftBridge.persistCutFrame]]): the first pass materializes
-  *     it, and the cuts are released when the fit returns or throws.
+  *     lazily ([[GraftBridge.persistCutFrame]]): the first pass
+  *     materializes it, and the cuts are released when the fit returns
+  *     or throws.
   *   - Determinism. Each row's gradient term (p − y)·x is computed in
   *     IEEE double, quantized to DECIMAL(38,6) and summed exactly:
   *     decimal addition is order-invariant, so the fit is
@@ -52,7 +52,7 @@ private[ext] object Logistic {
       pass: (Seq[DataFrame], IndexedSeq[Double]) => Pass): IndexedSeq[Double] = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(lr > 0, s"lr must be positive, got $lr")
-    val cuts = train.map(GraftBridge.persistCutFrame(_, keepPartitioning = true))
+    val cuts = train.map(GraftBridge.persistCutFrame(_))
     try {
       val w = Array.fill(dims)(0.0)
       for (_ <- 1 to iters) {

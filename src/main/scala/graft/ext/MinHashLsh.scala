@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** MinHash + LSH banding near-duplicate detection — the linear-shuffle
@@ -97,16 +97,12 @@ object MinHashLsh {
         (bd * r until (bd + 1) * r).map(i => col("__sig").getItem(i))): _*)
     }
     // candidate pairs are tiny (two ids per row) but feed three plan
-    // branches — materialize once (lazy local checkpoint) so the band
-    // join does not re-execute per branch (measured: relying on
-    // ReuseExchange instead is ~0.5s slower here — the three consumer
-    // subtrees diverge after optimization and re-execute). Retention
-    // caveat: checkpoint blocks are not released by unpersist, so they
-    // live until the session ends — acceptable for candidate frames
-    // (two ids per row), but long-lived sessions doing unbounded
-    // repeated dedup passes should recycle their SparkSession.
-    val cand = bandedCandidates(sig, Seq(col("__sig")), bandCols, maxBucket)
-      .localCheckpoint(false)
+    // branches — materialize once (lazy cut) so the band join does not
+    // re-execute per branch (measured: relying on ReuseExchange
+    // instead is ~0.5s slower here — the three consumer subtrees
+    // diverge after optimization and re-execute)
+    val cand = GraftBridge.persistCut(
+      bandedCandidates(sig, Seq(col("__sig")), bandCols, maxBucket))
 
     // attach payloads to the (few) surviving candidate pairs only (see
     // exactRerank for the candidate-proportional shape)
@@ -150,11 +146,9 @@ object MinHashLsh {
     // the (id, signature, group) frame feeds SIX plan branches (band
     // sides, both cross-expansion sides, both intra sides) — without a
     // barrier each branch re-runs the signature aggregate above the
-    // reused exchange; materialize it once (k longs per doc, compact).
-    // Same retention caveat as the candidate checkpoint below.
-    val members = sig.withColumn("__gid",
-      min(col("__id")).over(Window.partitionBy(sigCols: _*)))
-      .localCheckpoint(false)
+    // reused exchange; materialize it once (k longs per doc, compact)
+    val members = GraftBridge.persistCut(sig.withColumn("__gid",
+      min(col("__id")).over(Window.partitionBy(sigCols: _*))))
     val groups = members.filter(col("__id") === col("__gid"))
     val banded = groups.select(col("__gid"), explode(array(bandKeys: _*)).as("__bh"))
     val guarded =
@@ -343,8 +337,8 @@ object MinHashLsh {
       .withColumnRenamed("id", "__id")
     val bandCols = portableBandKeys(k, bands)
     val sigCols = (0 until k).map(i => col(s"m$i"))
-    val cand = bandedCandidates(sig, sigCols, bandCols, maxBucket)
-      .localCheckpoint(false)
+    val cand = GraftBridge.persistCut(
+      bandedCandidates(sig, sigCols, bandCols, maxBucket))
 
     exactRerank(cand, df, id, text, ShingleJaccard.wordShingles, n)
       .filter(col("jaccard") >= threshold)
@@ -369,8 +363,8 @@ object MinHashLsh {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val sig = sigs.withColumnRenamed("id", "__id")
     val sigCols = (0 until k).map(i => col(s"m$i"))
-    val cand = bandedCandidates(sig, sigCols, portableBandKeys(k, bands),
-      maxBucket).localCheckpoint(false)
+    val cand = GraftBridge.persistCut(
+      bandedCandidates(sig, sigCols, portableBandKeys(k, bands), maxBucket))
     val est = (0 until k)
       .map(i => when(col(s"__a$i") === col(s"__b$i"), 1).otherwise(0))
       .reduce(_ + _).cast("double") / k
@@ -413,8 +407,8 @@ object MinHashLsh {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     import org.apache.spark.sql.expressions.Window
     val bandKeys = portableBandKeys(k, bands)
-    val newSigs = portableSignatures(newBatch, id, text, n, k)
-      .localCheckpoint(false) // feeds the band join AND the estimate join
+    // feeds the band join AND the estimate join
+    val newSigs = GraftBridge.persistCut(portableSignatures(newBatch, id, text, n, k))
     val nb = newSigs.select(col("id").as("__nid"),
       explode(array(bandKeys: _*)).as("__bh"))
     val cbAll = corpusSigs.select(col("id").as("__cid"),

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Exact n-gram (character-shingle) Jaccard near-duplicate detection.
@@ -62,9 +62,9 @@ object ShingleJaccard {
     // the shingle frame feeds three consumers (sizes + both self-join
     // sides); without a barrier each consumer replans the whole
     // scan+explode subtree (measured: 4 FileScans / 4 Generates on
-    // q24). Materialize once — same lazy-checkpoint pattern as
-    // MinHashLsh's signature frames (retention caveat there applies).
-    val pruned = prunedPlan.localCheckpoint(false)
+    // q24). Materialize once, a lazy cut as for MinHashLsh's
+    // signature frames.
+    val pruned = GraftBridge.persistCut(prunedPlan)
     val sizes = pruned.groupBy("__id").agg(count(lit(1)).as("__n"))
     val a = pruned.select(col("__id").as("id1"), col("__sh"))
     val b = pruned.select(col("__id").as("id2"), col("__sh"))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** 64-bit SimHash near-duplicate fingerprinting.
@@ -67,9 +67,8 @@ object SimHash {
     // the fingerprint frame feeds six plan branches (distinct→band
     // sides, both expansion sides, both intra sides); materialize it
     // once — 16 bytes per doc — so the fingerprint aggregation is not
-    // re-run per branch. Checkpoint-block retention is documented in
-    // MinHashLsh.nearDupPairs; same tradeoff here.
-    val fpsM = fps.localCheckpoint(false)
+    // re-run per branch
+    val fpsM = GraftBridge.persistCut(fps)
     val banded = fpsM.select(col(fpCol)).distinct().withColumn("__bc", explode(chunks))
     val guarded =
       if (maxBucket == Int.MaxValue) banded

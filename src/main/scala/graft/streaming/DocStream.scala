@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.ext.{MinHashLsh, NgramLm, ShingleJaccard}
@@ -409,6 +409,9 @@ object DocStream {
     * within-batch near-dup closure runs
     * [[graft.ext.MinHashLsh.selfNearDupEstimate]] over the fresh
     * batch's signatures before folding them in.
+    *
+    * The admitted frame is cut for the batch and released once `emit`
+    * returns: frames used after that are recomputed, not held.
     */
   def corpusAdmitted(docs: DataFrame, id: Column, text: Column,
                      corpusDigests: DataFrame, corpusSigs: DataFrame,
@@ -432,13 +435,13 @@ object DocStream {
           text, corpusDigests)
         val hits = MinHashLsh.incrementalNearDup(fresh, id, text,
           corpusSigs, n, k, bands, threshold)
-        val admitted = fresh.join(hits.select(col("new_id")).distinct(),
-            id === col("new_id"), "left_anti")
-          .localCheckpoint(false)
+        val cut = GraftBridge.persistCutFrame(fresh.join(
+          hits.select(col("new_id")).distinct(), id === col("new_id"), "left_anti"))
+        val admitted = cut.df
         val updated = graft.ext.Sharding.admitManifest(storedManifest,
           admitted.withColumn("__shard", pmod(id, lit(nShards.toLong))),
           col("__shard"), text, graft.ext.TextAnalysis.charCount(text))
-        emit(admitted, updated)
+        try emit(admitted, updated) finally cut.release()
       }
 
   def trustScreened(docs: DataFrame, host: Column, scores: DataFrame,

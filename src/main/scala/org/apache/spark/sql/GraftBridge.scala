@@ -35,37 +35,12 @@ object GraftBridge {
 
   /** A releasable lineage cut with its release handle. `release()`
     * unpersists the backing RDD blocks; the frame stays CORRECT
-    * afterwards (the RDD keeps its dependency chain, unlike
-    * localCheckpoint, whose blocks are both unreleasable via
-    * Dataset.unpersist and unrecoverable if lost) — consuming the
+    * afterwards (the RDD keeps its dependency chain) — consuming the
     * frame after release merely recomputes.
     */
   final case class CutFrame(df: Dataset[Row], release: () => Unit = () => (),
                             eagerCount: Option[Long] = None)
 
-  /** Cut a DataFrame's lineage at the SQL layer with RELEASABLE
-    * storage: materializes the physical plan's InternalRow RDD under a
-    * persist and rebuilds the frame as a leaf (LogicalRDD) over it.
-    *
-    * Why not the alternatives, for iterative operators (connected
-    * components, Lloyd rounds, LSH self-joins):
-    *   - plain persist does NOT cut the logical plan — each round
-    *     embeds the previous round's tree several times, so plans grow
-    *     EXPONENTIALLY and a ~12-round run dies inside plan
-    *     stringification before anything executes (measured; see
-    *     DedupClusters);
-    *   - localCheckpoint cuts lineage but its blocks ignore
-    *     Dataset.unpersist and survive until session teardown, and a
-    *     lost block is unrecoverable (lineage truncated).
-    * This cut gives both properties: the logical plan collapses to a
-    * leaf (plans stay constant-size across rounds) AND the blocks are
-    * individually releasable — release the PREVIOUS round as soon as
-    * the next is materialized and retention stays O(1) rounds.
-    *
-    * Rows are defensively copied before caching (the physical plan may
-    * reuse row buffers); the cut is lazy — force it with an action (the
-    * iterative loops' convergence counts do) or `eager = true`.
-    */
   private val trackedCuts =
     new ThreadLocal[scala.collection.mutable.Set[Int]]
 
@@ -84,10 +59,44 @@ object GraftBridge {
     finally { if (prev == null) trackedCuts.remove() else trackedCuts.set(prev) }
   }
 
-  def persistCutFrame(df: Dataset[Row], eager: Boolean = false,
-                      keepPartitioning: Boolean = false): CutFrame = {
+  /** The one stage barrier of operator and gate code: cut a
+    * DataFrame's lineage at the SQL layer with RELEASABLE storage.
+    * Materializes the physical plan's InternalRow RDD under a persist
+    * and rebuilds the frame as the leaf `Dataset.localCheckpoint`
+    * builds (`LogicalRDD.fromDataset`): it carries the origin plan's
+    * statistics, so a small cut is broadcast, and whatever output
+    * partitioning and ordering the executed plan reports (none after
+    * an AQE-coalesced shuffle read).
+    *
+    * Why not the alternatives:
+    *   - plain persist does NOT cut the logical plan — each round of an
+    *     iterative operator embeds the previous round's tree several
+    *     times, so plans grow EXPONENTIALLY and a ~12-round run dies
+    *     inside plan stringification before anything executes
+    *     (measured; see DedupClusters);
+    *   - localCheckpoint drops the lineage: its blocks are not freed by
+    *     Dataset.unpersist (only by a sweep of
+    *     sparkContext.getPersistentRDDs), and a lost block fails the
+    *     query instead of recomputing.
+    * This cut keeps its lineage, so a lost or released block is
+    * recomputed, and its plan is a leaf, so plans stay constant-size
+    * across rounds. Release the PREVIOUS round as soon as the next is
+    * materialized and retention stays O(1) rounds.
+    *
+    * `localCheckpoint` is left in two places. `AragonPipeline.snapshot`:
+    * its lineage truncation is its isolation guarantee — a lost key
+    * block must fail the load, not recompute against the run's own
+    * appends. The stage cuts of the q215 corpus build: each stage feeds
+    * the next, and kept lineage would pin every earlier stage's plans
+    * and broadcast relations on the driver until the build's last
+    * collect.
+    *
+    * Rows are defensively copied before caching (the physical plan may
+    * reuse row buffers); the cut is lazy — force it with an action (the
+    * iterative loops' convergence counts do) or `eager = true`.
+    */
+  def persistCutFrame(df: Dataset[Row], eager: Boolean = false): CutFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val spark = ds.sparkSession
     val rdd = ds.queryExecution.toRdd.map(_.copy())
       .setName("graft-cut")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -96,21 +105,8 @@ object GraftBridge {
     // need the row count (iterative convergence checks) don't pay a
     // second job for a number the persist already computed
     val eagerCount = if (eager) Some(rdd.count()) else None
-    // keepPartitioning: rebuild the leaf WITH the physical plan's
-    // output partitioning/ordering (LogicalRDD.fromDataset — the same
-    // mechanism Dataset.localCheckpoint uses), so a consumer that
-    // re-keys by the cut's partitioning column plans NO new Exchange.
-    // Iterative trainers (HashedNgram's per-iteration doc_id
-    // aggregations/joins over the features cut) otherwise re-shuffle
-    // the corpus-proportional cut once per consumer per round. Plain
-    // internalCreateDataFrame stays the default: a partitioning-less
-    // leaf lets AQE pick fresh (possibly coalesced) partitioning,
-    // which is right for one-shot barriers.
-    val frame =
-      if (keepPartitioning)
-        classic.Dataset.ofRows(spark, execution.LogicalRDD.fromDataset(
-          rdd, ds, isStreaming = false))
-      else spark.internalCreateDataFrame(rdd, ds.schema)
+    val frame = classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
     CutFrame(frame, () => {
       rdd.unpersist(blocking = false); ()
     }, eagerCount)
@@ -139,8 +135,7 @@ object GraftBridge {
 
   /** [[persistCutFrame]] without the handle — for one-shot barriers
     * whose blocks are released by the session-level sweep
-    * (sparkContext.getPersistentRDDs.unpersist), which CAN free these
-    * (and cannot free localCheckpoint blocks).
+    * (sparkContext.getPersistentRDDs.unpersist).
     */
   def persistCut(df: Dataset[Row]): Dataset[Row] = persistCutFrame(df).df
 

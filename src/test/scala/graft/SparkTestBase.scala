@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +10,29 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Jobs this thread starts while `body` runs. Only this thread's job
+    * group is counted, so concurrent suites on the shared SparkContext
+    * do not leak into the number. */
+  def jobs(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"test-jobs-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "test job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
 }
 
 object SparkTestBase {

@@ -299,7 +299,7 @@ class NearDupSpec extends SparkTestBase {
       .orderBy("cell").select($"centroid").as[Seq[Double]].collect()
     assert(repart.toSeq == cents.toSeq)
 
-    // per-round localCheckpoint barrier: the final round's plan reads
+    // per-round cut (Rounds): the final round's plan reads
     // round N-1's k materialized rows, not N-1 nested assignment
     // subtrees — exactly ONE join survives in the optimized plan, so
     // total work stays linear in iters (no barrier -> 5 joins here)
@@ -313,5 +313,50 @@ class NearDupSpec extends SparkTestBase {
       k = 2, iters = 1).orderBy("cell").select($"centroid")
       .as[Seq[Double]].collect().toSeq
     assert(cents.toSeq == it1) // converged after round 1 by construction
+  }
+
+  test("each near-dup operator owns its GraftBridge cuts; rows survive their release") {
+    import org.apache.spark.sql.{DataFrame, GraftBridge}
+    val sc = spark.sparkContext
+    val sigs = MinHashLsh.portableSignatures(corpus, $"id", $"text", n = 3, k = 8)
+    val newBatch = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog again and again today"),
+      (11L, "fresh unrelated words with no overlap whatsoever")).toDF("id", "text")
+    val sourced = Seq((1L, "alpha", "a"), (2L, "alpha", "b"), (3L, "beta", "a"),
+      (4L, "beta", "c")).toDF("id", "text", "source")
+    val bitext = Seq((1L, 10L, 0.9), (1L, 20L, 0.1), (2L, 10L, 0.2), (2L, 20L, 0.8))
+      .toDF("src_id", "tgt_id", "cos")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "MinHashLsh.nearDupPairs" -> (() => MinHashLsh.nearDupPairs(corpus, $"id",
+        $"text", n = 3, k = 128, bands = 32, threshold = 0.6)),
+      "MinHashLsh.nearDupPairsPortable" -> (() => MinHashLsh.nearDupPairsPortable(
+        corpus, $"id", $"text", n = 3, k = 8, bands = 4, threshold = 0.5)),
+      "MinHashLsh.selfNearDupEstimate" -> (() =>
+        MinHashLsh.selfNearDupEstimate(sigs, k = 8, bands = 4, threshold = 0.5)),
+      "MinHashLsh.incrementalNearDup" -> (() => MinHashLsh.incrementalNearDup(
+        newBatch, $"id", $"text", sigs, n = 3, k = 8, bands = 4, threshold = 0.5)),
+      "SimHash.nearDupPairs" -> (() =>
+        SimHash.nearDupPairs(dupHeavy, $"id", $"text", maxDist = 3, bands = 4)),
+      "ShingleJaccard.similarPairs" -> (() =>
+        ShingleJaccard.similarPairs(corpus, $"id", $"text", 3, 0.3)),
+      "Containment.containedPairs" -> (() =>
+        Containment.containedPairs(corpus, $"id", $"text", 3, 1, 2)),
+      "ExactDedup.crossSourceOverlap" -> (() =>
+        ExactDedup.crossSourceOverlap(sourced, $"text", $"source")),
+      "EmbeddingSearch.bitextMarginFromPairs" -> (() =>
+        EmbeddingSearch.bitextMarginFromPairs(bitext, k = 2, minMargin = 1.05)))
+    ops.foreach { case (name, op) =>
+      val ((frame, rows), mine) = GraftBridge.trackCuts {
+        val f = op()
+        (f, f.collect().map(_.toSeq).toSet)
+      }
+      assert(rows.nonEmpty, s"$name: the fixture should yield rows")
+      assert(mine.nonEmpty, s"$name: no GraftBridge cut")
+      assert(mine.subsetOf(sc.getPersistentRDDs.keySet.toSet),
+        s"$name: cuts ${mine.mkString(",")} not persisted after the collect")
+      mine.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+      assert(frame.collect().map(_.toSeq).toSet == rows,
+        s"$name: rows changed once its cuts were released")
+    }
   }
 }

@@ -1,13 +1,11 @@
 package graft.ext
 
 import graft.SparkTestBase
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Job ceilings for the logistic-regression trainers: the jobs of a
   * fit at iters 2, and the jobs one more gradient pass adds. Only this
-  * thread's job group is counted, so concurrent suites on the shared
-  * SparkContext do not leak into the numbers. Ceilings only move down.
+  * thread's job group is counted ([[SparkTestBase.jobs]]). Ceilings
+  * only move down.
   */
 class TrainerJobsSpec extends SparkTestBase {
   import spark.implicits._
@@ -20,27 +18,6 @@ class TrainerJobsSpec extends SparkTestBase {
     val text = (0 until 10).map(k => words((i + k) % words.length)).mkString("the ", " the ", "")
     (i.toLong, text, if (i < 20) 1 else 0)
   }.toDF("doc_id", "text", "label")
-
-  /** Jobs this thread starts while `body` runs. */
-  private def jobs(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"trainer-jobs-${java.util.UUID.randomUUID}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "trainer job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
 
   // (fit, ceiling at iters 2, ceiling per added pass)
   private val ceilings: Seq[(String, Int => Any, Int, Int)] = Seq(

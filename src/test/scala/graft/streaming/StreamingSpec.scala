@@ -1375,12 +1375,14 @@ class StreamingSpec extends SparkTestBase {
     val stream = spark.readStream.schema(batchDocs.schema).parquet(s"$dir/part*")
     var gotAdmitted = Set.empty[Long]
     var gotManifest = Set.empty[Seq[Any]]
+    var admFrame: org.apache.spark.sql.DataFrame = null
     val ckpt = java.nio.file.Files.createTempDirectory("admit-stream-ckpt")
     val q = DocStream.corpusAdmitted(stream, $"doc_id", $"text",
       digests, sigs, stored, nShards = 7,
       minWords = 5L, maxWords = 100000L, n = 3, k = 8, bands = 4,
       threshold = 0.5,
       (adm, mf) => {
+        admFrame = adm
         gotAdmitted = adm.select($"doc_id").collect().map(_.getLong(0)).toSet
         gotManifest = mf.collect().map(_.toSeq).toSet
       }, ckpt.toString).start()
@@ -1392,6 +1394,13 @@ class StreamingSpec extends SparkTestBase {
         .collect().map(_.getLong(0)).toSet.intersect(gotAdmitted).isEmpty)
       assert(gotManifest == wantManifest, "admit-fold must equal rebuild")
       assert(q.lastProgress.stateOperators.forall(_.numRowsTotal == 0))
+      // the batch's cut is released once emit returns
+      val cuts = admFrame.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+      assert(cuts.nonEmpty)
+      assert(!cuts.exists(spark.sparkContext.getPersistentRDDs.contains),
+        s"admitted cut ${cuts.mkString(",")} still persisted after emit returned")
     } finally q.stop()
   }
 }
