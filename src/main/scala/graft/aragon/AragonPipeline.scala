@@ -93,7 +93,7 @@ object AragonPipeline {
     wh.append(res.locations, "hospital_locations")
     wh.append(res.beds, "hospital_bed_information")
     QuarantineSink.write(res.quarantine, s"$quarantineDir/hhs")
-    res.unpersist() // per-load caches must not accumulate across files
+    res.unpersist() // per-load cuts must not accumulate across files
     res.metrics
   }
 

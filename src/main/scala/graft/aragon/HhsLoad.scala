@@ -1,9 +1,9 @@
 package graft.aragon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.{Cleaning, Dedup, Validate}
+import graft.ops.{Cleaning, Validate}
 import AragonSchema._
 
 /** The HHS weekly-capacity load pipeline (reference load_hhs.py,
@@ -14,10 +14,10 @@ import AragonSchema._
   * Spark shape: single CSV scan (all columns as strings, so quarantined
   * rows keep their ORIGINAL text — the reference re-reads the file for
   * this, load_hhs.py:154; we carry it in the same scan) → typed
-  * projections → anti-join dedup vs existing-key snapshots → validate-
-  * split → three inserts + quarantine. Narrow except the dedup joins
-  * (broadcast of key snapshots) and the intra-file firstPerKey (one
-  * shuffle on the key).
+  * projection of the consumed columns → anti-join dedup vs existing-key
+  * snapshots → validate-split → three inserts + quarantine. Narrow
+  * except the dedup joins (broadcast of key snapshots) and the
+  * intra-file firstPerKey (one shuffle on the key).
   *
   * Semantic deltas vs the reference, knowingly accepted (SURVEY §7.3):
   * per-row insert-order dedup is reproduced deterministically by
@@ -29,6 +29,14 @@ object HhsLoad {
   private val RowId = "__row_id"
   private val SrcFile = "__src_file"
 
+  /** The 17 of the feed's 127 columns the three tables read, plus the
+    * file-order keys. Only the quarantine needs the rest, and it takes
+    * them from the raw rows by `__row_id`.
+    */
+  private val consumed: Seq[String] =
+    Seq("hospital_pk", "hospital_name", "collection_week") ++ locationCols ++ bedMetrics ++
+      Seq(SrcFile, RowId)
+
   /** Per-file load accounting (reference load_hhs.py:157-161). */
   final case class Metrics(
       totalRows: Long,
@@ -38,14 +46,14 @@ object HhsLoad {
 
   /** The three normalized outputs + quarantine (original text rows).
     * Call `unpersist()` once the outputs are written — the frames
-    * derive from per-load caches that otherwise accumulate across a
+    * derive from per-load cuts that otherwise accumulate across a
     * multi-file loading session.
     */
   final case class Result(
       hospitals: DataFrame, locations: DataFrame, beds: DataFrame,
       quarantine: DataFrame, metrics: Metrics,
-      private val caches: Seq[DataFrame] = Nil) {
-    def unpersist(): Unit = caches.foreach(_.unpersist())
+      private val releases: Seq[() => Unit] = Nil) {
+    def unpersist(): Unit = releases.foreach(_())
   }
 
   /** S1/S3: ONE scan — header'd CSV, `NA` literal → null, every column
@@ -91,17 +99,24 @@ object HhsLoad {
 
     import org.apache.spark.sql.expressions.Window
 
-    // raw is cached: the quarantine branch re-reads it, and the row ids
+    // raw is cut: the quarantine branch re-reads it, and the row ids
     // from monotonically_increasing_id must be the SAME ids the tagged
-    // frame saw — a second scan is not guaranteed to reproduce them
-    val raw = readRaw(spark, csvPath).cache()
-    val typed = clean(raw)
+    // frame saw — a second scan is not guaranteed to reproduce them.
+    // Both per-load frames are GraftBridge cuts, which store rows and
+    // skip the columnar cache's encoding pass.
+    val rawCut = GraftBridge.persistCutFrame(readRaw(spark, csvPath))
+    val raw = rawCut.df
+    // Narrow before the windows, joins and cut: 127 CSV columns plus the
+    // typed copies exceed spark.sql.codegen.maxFields (100), and a plan
+    // that wide runs interpreted instead of in whole-stage codegen.
+    val typed = clean(raw.select(consumed.map(col): _*))
 
     // --- ONE tagged frame instead of three branch pipelines ------------
     // Hospitals and Locations share the hospital_pk key → one window
-    // serves both; beds key adds collection_week → second window. The
+    // serves both; beds key adds collection_week → second window. Both
+    // windows cluster on hospital_pk, so the file is shuffled once. The
     // existing-key probes are broadcast left joins with marker flags.
-    // Net cost: 2 window shuffles + broadcasts over ONE pass of the
+    // Net cost: 1 window shuffle + broadcasts over ONE pass of the
     // scan — the branch-per-table form re-shuffled and cached the wide
     // frame three times.
     val wPk = Window.partitionBy(col("hospital_pk"))
@@ -116,7 +131,7 @@ object HhsLoad {
     def existsIn(keys: DataFrame, flag: String, on: Seq[String]): DataFrame =
       broadcast(keys.dropDuplicates(on).withColumn(flag, lit(true)))
 
-    val tagged = typed
+    val taggedCut = GraftBridge.persistCutFrame(typed
       .withColumn("__first_pk", row_number().over(wPk) === 1)
       .withColumn("__first_bed", row_number().over(wBed) === 1)
       .join(existsIn(existingHospitalPks.toDF("hospital_pk"), "__pk_exists", Seq("hospital_pk")),
@@ -131,8 +146,8 @@ object HhsLoad {
       .withColumn("__keep_loc", col("__first_pk") && col("__fk_exists").isNull)
       .withColumn("__bed_fresh", col("__first_bed") && col("__bed_exists").isNull)
       .withColumn("__bed_valid", bedValidPred)
-      .withColumn("__keep_bed", col("__bed_fresh") && col("__bed_valid"))
-      .cache()
+      .withColumn("__keep_bed", col("__bed_fresh") && col("__bed_valid")))
+    val tagged = taggedCut.df
 
     val hospNew = tagged.filter(col("__keep_hosp"))
       .select(col("hospital_pk"), col("hospital_name"), col(RowId))
@@ -146,7 +161,9 @@ object HhsLoad {
     val quarantineIds = tagged
       .filter(!(col("__keep_hosp") && col("__keep_loc") && col("__keep_bed")))
       .select(col(RowId))
-    val quarantine = raw.join(quarantineIds, Seq(RowId), "left_semi")
+    // broadcast keeps the raw side's file order: a shuffled semi join
+    // would emit the rows in hash order
+    val quarantine = raw.join(broadcast(quarantineIds), Seq(RowId), "left_semi")
       .drop(RowId, SrcFile)
 
     // --- Metrics: ONE aggregation action over the tagged frame ---------
@@ -181,6 +198,6 @@ object HhsLoad {
       beds = bedNew.drop(RowId),
       quarantine = quarantine,
       metrics = metrics,
-      caches = Seq(raw, tagged))
+      releases = Seq(rawCut.release, taggedCut.release))
   }
 }

@@ -1,6 +1,6 @@
 package graft.aragon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.{Cleaning, Validate}
@@ -30,9 +30,12 @@ object QualityLoad {
 
   final case class Metrics(totalRows: Long, inserted: Long, duplicates: Long, invalid: Long)
 
+  /** Call `unpersist()` once the outputs are written: it frees the
+    * load's raw and tagged cuts.
+    */
   final case class Result(quality: DataFrame, quarantine: DataFrame, metrics: Metrics,
-                          private val caches: Seq[DataFrame] = Nil) {
-    def unpersist(): Unit = caches.foreach(_.unpersist())
+                          private val releases: Seq[() => Unit] = Nil) {
+    def unpersist(): Unit = releases.foreach(_())
   }
 
   /** S2/S3: one scan, all columns as raw strings (quarantine needs the
@@ -74,7 +77,9 @@ object QualityLoad {
   def load(spark: SparkSession, csvPath: String, date: java.sql.Date,
            existingKeys: DataFrame): Result = {
 
-    val raw = readRaw(spark, csvPath).cache()
+    // raw is cut so the quarantine sees the row ids the tagged frame saw
+    val rawCut = GraftBridge.persistCutFrame(readRaw(spark, csvPath))
+    val raw = rawCut.df
     // ONE tagged frame (the HhsLoad shape). `__dup`: D3's batched probe
     // as a broadcast join on facility_id at this date. `__valid`: P10's
     // CHECK (hospital_overall_rating >= 0) plus the BOOLEAN-column
@@ -84,17 +89,18 @@ object QualityLoad {
       .filter(col("data_date") === lit(date)).select("facility_id")
       .dropDuplicates("facility_id")
       .withColumn("__dup", lit(true))
-    val tagged = clean(raw, date)
+    val taggedCut = GraftBridge.persistCutFrame(clean(raw, date)
       .join(broadcast(existingAtDate), Seq("facility_id"), "left")
       .withColumn("__dup", col("__dup").isNotNull)
       .withColumn("__valid", Validate.validPredicate(Seq(
         col("hospital_overall_rating").isNull || col("hospital_overall_rating") >= 0,
-        col(EsRaw).isNull || col(EsRaw).isin("Yes", "No"))))
-      .cache()
+        col(EsRaw).isNull || col(EsRaw).isin("Yes", "No")))))
+    val tagged = taggedCut.df
     val keep = !col("__dup") && col("__valid")
 
+    // broadcast keeps the raw side's file order
     val quarantine = raw
-      .join(tagged.filter(!keep).select(RowId), Seq(RowId), "left_semi")
+      .join(broadcast(tagged.filter(!keep).select(RowId)), Seq(RowId), "left_semi")
       .drop(RowId)
 
     // Metrics: ONE aggregation action over the tagged frame
@@ -119,6 +125,6 @@ object QualityLoad {
       col("facility_id"), col("hospital_type"), col("hospital_ownership"),
       col("emergency_services"), col("hospital_overall_rating"), col("data_date"))
 
-    Result(out, quarantine, metrics, caches = Seq(raw, tagged))
+    Result(out, quarantine, metrics, releases = Seq(rawCut.release, taggedCut.release))
   }
 }

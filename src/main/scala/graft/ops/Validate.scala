@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale: both sides are narrow filters over the same scan; Spark will
   * read the source twice unless the caller caches — at 100 TB prefer a
-  * single pass that writes both sides (see splitWrite pattern in the
-  * aragon loaders) or accept the double scan when the source is columnar
-  * and the predicate prunes well.
+  * single pass that tags each row once and feeds both sides (the aragon
+  * loaders' tagged frame, cut once and filtered per sink) or accept the
+  * double scan when the source is columnar and the predicate prunes
+  * well.
   */
 object Validate {
 

@@ -83,6 +83,14 @@ object GraftBridge {
     * across rounds. Release the PREVIOUS round as soon as the next is
     * materialized and retention stays O(1) rounds.
     *
+    * Users: `Rounds` and `Logistic.descend` (per-round and training
+    * cuts), the per-stage barriers of the dedup/retrieval operators and
+    * gates, `DocStream`'s micro-batch cut, and the two loaders
+    * (`HhsLoad`, `QualityLoad`), which cut their raw and tagged frames
+    * per file and free them through `Result.unpersist()`. A cut stores
+    * rows and skips the columnar cache's encoding pass, which on a
+    * 127-column CSV costs more than the parse.
+    *
     * `localCheckpoint` is left in two places. `AragonPipeline.snapshot`:
     * its lineage truncation is its isolation guarantee — a lost key
     * block must fail the load, not recompute against the run's own

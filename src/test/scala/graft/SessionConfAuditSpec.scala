@@ -20,6 +20,8 @@ import scala.jdk.CollectionConverters._
   * `AragonPipeline.snapshot`, whose dropped lineage is its isolation,
   * and the stage cuts of the q215 corpus build, whose lineage would pin
   * every earlier stage on the driver until the build's last collect.
+  * The loaders under `graft/aragon` hold their per-load frames as cuts
+  * too: no `.cache()` or `.persist(` is left there.
   */
 class SessionConfAuditSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -30,6 +32,7 @@ class SessionConfAuditSpec extends org.scalatest.funsuite.AnyFunSuite {
     """\bconf\s*\.\s*(set|unset)\w*\s*\(|\b(setConfString|unsetConf)\s*\(""".r
 
   private val localCheckpoint = """\blocalCheckpoint\s*\(""".r
+  private val cache = """\.\s*(cache\s*\(\s*\)|persist\s*\()""".r
 
   private def sources(dirs: Seq[String]): Seq[Path] =
     dirs.map(root.resolve).flatMap { dir =>
@@ -88,11 +91,19 @@ class SessionConfAuditSpec extends org.scalatest.funsuite.AnyFunSuite {
       aragon.head.text.contains("def snapshot"), aragon.mkString("\n"))
   }
 
+  test("the loaders hold their per-load frames as GraftBridge cuts: no cache or persist in aragon") {
+    val found = hits(sources(Seq("aragon")), cache)
+    assert(found.isEmpty, "cache/persist in graft/aragon:\n" + found.mkString("\n"))
+  }
+
   test("the scan sees a conf write") {
     assert(write.findFirstIn(code("""    spark.conf.set("spark.sql.adaptive.enabled", "false")""")).isDefined)
     assert(write.findFirstIn(code("""    sess.conf.unset("k")""")).isDefined)
     assert(write.findFirstIn(code("""    SQLConf.get.setConfString("k", "v")""")).isDefined)
     assert(write.findFirstIn(code("""    val v = spark.conf.get("k") // conf.set here is a comment""")).isEmpty)
     assert(localCheckpoint.findFirstIn(code("""      .localCheckpoint(false)""")).isDefined)
+    assert(cache.findFirstIn(code("""    val raw = readRaw(spark, csvPath).cache()""")).isDefined)
+    assert(cache.findFirstIn(code("""      .persist(StorageLevel.MEMORY_ONLY)""")).isDefined)
+    assert(cache.findFirstIn(code("""    res.unpersist()""")).isEmpty)
   }
 }

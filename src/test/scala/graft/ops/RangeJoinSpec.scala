@@ -121,25 +121,53 @@ class RangeJoinSpec extends SparkTestBase {
     assert(!rep("old_col") && !rep("new_col"), "schema change must surface as failure")
   }
 
-  test("driftReport over two real HHS weeks: row delta tiny, bed-metric null rates drift within bounds") {
-    import graft.aragon.HhsLoad
-    val w1 = HhsLoad.clean(HhsLoad.readRaw(spark,
-      "/root/reference/hhs_data/2022-09-23-hhs-data.csv"))
-    val w2 = HhsLoad.clean(HhsLoad.readRaw(spark,
-      "/root/reference/hhs_data/2022-09-30-hhs-data.csv"))
-    val cols = Seq("hospital_pk", "collection_week", "all_adult_hospital_beds_7_day_avg",
-      "total_icu_beds_7_day_avg", "inpatient_beds_used_covid_7_day_avg")
-    val rep = Expectations.driftReport(
-      Expectations.loadProfile(w2, cols), Expectations.loadProfile(w1, cols),
+  private val driftCols = Seq("hospital_pk", "collection_week", "all_adult_hospital_beds_7_day_avg",
+    "total_icu_beds_7_day_avg", "inpatient_beds_used_covid_7_day_avg")
+
+  /** driftReport of week `w2` against week `w1` over [[driftCols]]. */
+  private def hhsDrift(w1: org.apache.spark.sql.DataFrame, w2: org.apache.spark.sql.DataFrame) =
+    Expectations.driftReport(
+      Expectations.loadProfile(w2, driftCols), Expectations.loadProfile(w1, driftCols),
       maxRowDeltaPct = 0.05, maxNullRateDrift = 0.05)
       .as[(String, String, Double, Double, Double, Boolean)].collect()
-    assert(rep.length == cols.length + 1)
+
+  /** The raw HHS week at `f`; the test cancels where the file is absent. */
+  private def readWeek(f: String) = {
+    assume(new java.io.File(f).isFile, s"$f is absent")
+    graft.aragon.HhsLoad.readRaw(spark, f)
+  }
+
+  test("driftReport over two real HHS weeks: row delta tiny, bed-metric null rates drift within bounds") {
+    import graft.aragon.HhsLoad
+    val w1 = HhsLoad.clean(readWeek(
+      "/root/reference/hhs_data/2022-09-23-hhs-data.csv"))
+    val w2 = HhsLoad.clean(readWeek(
+      "/root/reference/hhs_data/2022-09-30-hhs-data.csv"))
+    val rep = hhsDrift(w1, w2)
+    assert(rep.length == driftCols.length + 1)
     // consecutive HHS weeks are near-identical hospital sets: all green
     assert(rep.forall(_._6), rep.filterNot(_._6).mkString(","))
     // and the numbers are real: both weeks ~4996 rows, keys never null
     val rd = rep.find(_._1 == "row_count_delta").get
     assert(rd._3 > 4900 && rd._3 < 5100 && rd._4 > 4900 && rd._4 < 5100)
     assert(rep.find(r => r._2 == "hospital_pk").get._3 == 0.0)
+  }
+
+  test("driftReport over two generated 127-column HHS weeks: all green, counts real") {
+    import graft.aragon.{HhsFixture, HhsLoad}
+    val dir = java.nio.file.Files.createTempDirectory("hhs-drift")
+    // week 2 adds 2 hospitals; the metric cycle puts NA and -999999 in
+    // each metric at nearly the same rate both weeks
+    def week(date: String, n: Int) = HhsLoad.clean(readWeek(HhsFixture.write(
+      dir.resolve(s"$date-hhs-data.csv"), (1 to n).map(HhsFixture.facility(_, date)))))
+    val rep = hhsDrift(week("2022-01-07", 200), week("2022-01-14", 202))
+    assert(rep.length == driftCols.length + 1)
+    assert(rep.forall(_._6), rep.filterNot(_._6).mkString(","))
+    val rd = rep.find(_._1 == "row_count_delta").get
+    assert(rd._3 == 202 && rd._4 == 200)
+    assert(rep.find(r => r._2 == "hospital_pk").get._3 == 0.0)
+    // the sentinel and NA both read as null: a real, non-zero null rate
+    assert(rep.find(r => r._2 == "total_icu_beds_7_day_avg").get._3 > 0.05)
   }
 
   test("lookupJoin matches Spark's native BETWEEN join on random interval sets") {
