@@ -296,7 +296,7 @@ object CoreQueries {
         .select(
           $"o_custkey", $"o_orderkey",
           row_number().over(w).as("rn"),
-          sum($"o_totalprice".cast(DecimalType(38, 6))).over(wr).cast(DoubleType)
+          Aggs.dsum($"o_totalprice").over(wr).cast(DoubleType)
             .as("running_spend"))
         .orderBy($"o_custkey", $"rn")
     },

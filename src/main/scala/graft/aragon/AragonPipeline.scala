@@ -22,7 +22,8 @@ object AragonPipeline {
       extends graft.sources.ParquetSink(baseDir) with Warehouse {
     override def table(spark: SparkSession, name: String): Option[DataFrame] = {
       val p = new java.io.File(s"$baseDir/$name")
-      if (p.isDirectory) Some(spark.read.parquet(p.toString)) else None
+      if (p.isDirectory) Some(spark.read.schema(AragonSchema.tableSchemas(name)).parquet(p.toString))
+      else None
     }
   }
 
@@ -58,8 +59,12 @@ object AragonPipeline {
     }
   }
 
+  /** An empty key snapshot as an empty local relation: its size
+    * estimate is 0, where an empty RDD's is `spark.sql.defaultSizeInBytes`
+    * (`Long.MaxValue`) and makes every join over it plan as unbounded.
+    */
   private[aragon] def emptyDf(spark: SparkSession, fields: (String, DataType)*): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
       StructType(fields.map { case (n, t) => StructField(n, t) }))
 
   /** Snapshot isolation for dedup-vs-target: the existing-key frame is

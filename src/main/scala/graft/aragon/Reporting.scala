@@ -14,7 +14,9 @@ import graft.ops.Aggs
   * Catalyst plan. All joins are dimension-sized on the hospital axis →
   * the smaller side is broadcast; group-bys are the only shuffles.
   * ROUND(x::numeric, 2) is reproduced as round(decimal-exact sum, 2)
-  * (SURVEY §7.3 float-vs-NUMERIC note).
+  * (SURVEY §7.3 float-vs-NUMERIC note). The sorted results of Q2, Q5, Q6
+  * and Q8 are bounded by weeks × ratings and sort on one partition
+  * (`Aggs.sortSmall`).
   */
 object Reporting {
 
@@ -27,9 +29,9 @@ object Reporting {
 
   /** Q2 (:36-41): records per prior week, ordered. */
   def weeklyRecordsPrior(beds: DataFrame, week: String): DataFrame =
-    beds.filter(col("collection_week") < lit(week).cast(DateType))
-      .groupBy("collection_week").agg(count(lit(1)).as("n_records"))
-      .orderBy("collection_week")
+    Aggs.sortSmall(beds.filter(col("collection_week") < lit(week).cast(DateType))
+      .groupBy("collection_week").agg(count(lit(1)).as("n_records")),
+      col("collection_week"))
 
   private val summaryCols = Seq(
     "all_adult_hospital_beds_7_day_avg" -> "available_adult_beds",
@@ -53,30 +55,32 @@ object Reporting {
       .orderBy("collection_week")
   }
 
-  /** Q5 (:115-124): fraction of beds in use by quality rating (J1 + A5).
-    * SUM(a+b)/SUM(c+d) — null propagation of a+b matches SQL exactly.
+  /** SUM(a+b)/SUM(c+d) of Q5 and Q8 (A5/A8) — null propagation of a+b
+    * matches SQL exactly.
     */
+  private def fractionInUse: Column = Aggs.ratioOfSums(
+    col("all_adult_hospital_inpatient_bed_occupied_7_day_coverage") +
+      col("all_pediatric_inpatient_bed_occupied_7_day_avg"),
+    col("all_adult_hospital_beds_7_day_avg") +
+      col("all_pediatric_inpatient_beds_7_day_avg")).as("fraction_of_beds_in_use")
+
+  /** Q5 (:115-124): fraction of beds in use by quality rating (J1 + A5). */
   def ratingBedUse(quality: DataFrame, beds: DataFrame): DataFrame =
-    quality.join(beds, quality("facility_id") === beds("hospital_fk"))
+    Aggs.sortSmall(quality.join(beds, quality("facility_id") === beds("hospital_fk"))
       .groupBy("hospital_overall_rating")
-      .agg(Aggs.ratioOfSums(
-        col("all_adult_hospital_inpatient_bed_occupied_7_day_coverage") +
-          col("all_pediatric_inpatient_bed_occupied_7_day_avg"),
-        col("all_adult_hospital_beds_7_day_avg") +
-          col("all_pediatric_inpatient_beds_7_day_avg")).as("fraction_of_beds_in_use"))
-      .orderBy("hospital_overall_rating")
+      .agg(fractionInUse), col("hospital_overall_rating"))
 
   /** Q6 (:144-153): all-cases vs covid-cases bed totals per week (A6). */
   def totalBedUsage(beds: DataFrame, week: String): DataFrame =
-    beds.filter(col("collection_week") <= lit(week).cast(DateType))
+    Aggs.sortSmall(beds.filter(col("collection_week") <= lit(week).cast(DateType))
       .groupBy("collection_week")
       .agg(
         Aggs.dsumAsDouble(
           col("all_adult_hospital_inpatient_bed_occupied_7_day_coverage") +
             col("all_pediatric_inpatient_bed_occupied_7_day_avg") +
             col("icu_beds_used_7_day_avg")).as("all_cases"),
-        Aggs.dsumAsDouble(col("inpatient_beds_used_covid_7_day_avg")).as("covid_cases"))
-      .orderBy("collection_week")
+        Aggs.dsumAsDouble(col("inpatient_beds_used_covid_7_day_avg")).as("covid_cases")),
+      col("collection_week"))
 
   /** Q7 (:182-196): emergency-services hospital count by state, top 20
     * (J2 3-way join + A7 + client-side nlargest → one plan, O3 top-k).
@@ -91,15 +95,10 @@ object Reporting {
 
   /** Q8 (:213-221): fraction of beds in use by ownership over weeks (J3 + A8). */
   def ownershipBedUse(quality: DataFrame, beds: DataFrame, owner: String): DataFrame =
-    quality.filter(col("hospital_ownership") === owner)
+    Aggs.sortSmall(quality.filter(col("hospital_ownership") === owner)
       .join(beds, quality("facility_id") === beds("hospital_fk"))
       .groupBy("hospital_ownership", "collection_week")
-      .agg(Aggs.ratioOfSums(
-        col("all_adult_hospital_inpatient_bed_occupied_7_day_coverage") +
-          col("all_pediatric_inpatient_bed_occupied_7_day_avg"),
-        col("all_adult_hospital_beds_7_day_avg") +
-          col("all_pediatric_inpatient_beds_7_day_avg")).as("fraction_of_beds_in_use"))
-      .orderBy("collection_week")
+      .agg(fractionInUse), col("collection_week"))
 
   /** Q9 (:245-263): average rating by state at a snapshot date; top-10
     * AND bottom-10 states (J4 + P11/P12 + A9 + O5 — the client-side

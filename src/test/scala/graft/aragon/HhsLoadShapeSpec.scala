@@ -43,6 +43,13 @@ class HhsLoadShapeSpec extends SparkTestBase {
     AragonPipeline.emptyDf(spark, "hospital_fk" -> StringType),
     AragonPipeline.emptyDf(spark, "hospital_fk" -> StringType, "collection_week" -> DateType))
 
+  test("a first load's empty key frames are empty local relations sized 0") {
+    // an empty RDD is sized spark.sql.defaultSizeInBytes (Long.MaxValue),
+    // which makes every join planned over it read as unbounded
+    val empty = AragonPipeline.emptyDf(spark, "hospital_fk" -> StringType, "collection_week" -> DateType)
+    assert(empty.queryExecution.optimizedPlan.stats.sizeInBytes == 0)
+  }
+
   test("HHS load: metrics match the planted duplicates and negative metrics") {
     val r = firstLoad()
     try assert(r.metrics == HhsLoad.Metrics(totalRows = 70,
