@@ -1,7 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Near-duplicate cluster canonicalization: connected components over
   * a candidate-pair list, then one keeper per component.
@@ -31,6 +34,16 @@ import org.apache.spark.sql.functions._
   * one-shuffle-per-phase cost over the pair list.
   *
   * Scale design:
+  *   - A pair list whose rows fit the session's
+  *     `spark.sql.autoBroadcastJoinThreshold` (threshold ÷ (2 × the id
+  *     type's default size) rows) is contracted on the driver: one
+  *     collect, union-find with min-id roots under Spark's ordering of
+  *     the id type (UTF-8 byte order for strings), labels returned as a
+  *     local frame. A pair list that small is what a broadcast join
+  *     would ship anyway; the star rounds below are all per-job
+  *     overhead at that size. A threshold of −1 turns this off, and
+  *     larger lists, or ids whose equality is not their bytes', take
+  *     the star rounds — the only path that scales past the driver.
   *   - All shuffles are over the PAIR list — near-dup pair sets are
   *     orders of magnitude smaller than the corpus
   *     (candidate-proportional by LSH design) — and the edge set only
@@ -53,23 +66,29 @@ object DedupClusters {
     * Output: (id, component) for every node appearing in any pair,
     * where `component` is the smallest id in the node's component.
     *
+    * A null id labels as (null, null) and links nothing; a self-pair
+    * makes its id a node.
+    *
+    * @param maxIter bounds the star rounds only; a pair list contracted
+    *         on the driver runs none.
     * @throws IllegalStateException if star contraction has not reached
     *         its fixpoint within maxIter rounds (default 30 covers
     *         graphs far beyond 2^30 nodes; non-convergence indicates a
     *         bug or corrupted input, not a tuning problem).
     *
-    * Retention note: each round runs under a releasable persisted
-    * lineage cut ([[GraftBridge.persistCutFrame]] — plans stay
-    * constant-size, and a freed block is recomputed); round N-1's
-    * blocks are freed as soon as round N materializes, so in-flight
-    * retention is O(1) frames, not O(rounds). What survives the call
-    * is the node set + final star edges backing the returned labels —
-    * [[connectedComponentsReleasable]] hands back the release for
-    * those; the plain entry point leaves them to the session-level
-    * sweep (sparkContext.getPersistentRDDs unpersist).
+    * Retention note: the driver path holds no storage. Star rounds run
+    * under releasable persisted lineage cuts
+    * ([[GraftBridge.persistCutFrame]] — plans stay constant-size, and a
+    * freed block is recomputed); round N-1's blocks are freed as soon
+    * as round N materializes, so in-flight retention is O(1) frames,
+    * not O(rounds). What survives the call is the node set + final star
+    * edges backing the returned labels — [[connectedComponentsReleasable]]
+    * hands back the release for those; the plain entry point leaves
+    * them to the session-level sweep (sparkContext.getPersistentRDDs
+    * unpersist).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame =
-    componentsWithRounds(pairs, maxIter)._1
+    componentsImpl(pairs, maxIter, onDriver = true)._1
 
   /** [[connectedComponents]] returning the labels together with an
     * explicit release handle for the persisted blocks that back them
@@ -83,20 +102,22 @@ object DedupClusters {
     */
   def connectedComponentsReleasable(pairs: DataFrame,
                                     maxIter: Int = 30): (DataFrame, () => Unit) = {
-    val (labels, _, release) = componentsImpl(pairs, maxIter)
+    val (labels, _, release) = componentsImpl(pairs, maxIter, onDriver = true)
     (labels, release)
   }
 
-  /** [[connectedComponents]] plus the number of star rounds executed —
-    * exposed so tests and ScaleCheck can pin the O(log n) round bound
-    * (a 500-link chain must converge in ~log rounds, not 500).
+  /** [[connectedComponents]] by star rounds whatever the pair list's
+    * size, plus the number of rounds executed — exposed so tests and
+    * ScaleCheck can pin the O(log n) round bound (a 500-link chain must
+    * converge in ~log rounds, not 500) and the rounds' job count.
     */
   private[graft] def componentsWithRounds(pairs: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
-    val (labels, iters, _) = componentsImpl(pairs, maxIter)
+    val (labels, iters, _) = componentsImpl(pairs, maxIter, onDriver = false)
     (labels, iters)
   }
 
-  private def componentsImpl(pairs: DataFrame, maxIter: Int): (DataFrame, Int, () => Unit) = {
+  private def componentsImpl(pairs: DataFrame, maxIter: Int,
+                             onDriver: Boolean): (DataFrame, Int, () => Unit) = {
     // ONE traversal of the caller's pair plan (r17): nodes and edges
     // both derive from the pair list, and materializing each cut
     // straight off `pairs` executed the upstream candidate-generation
@@ -119,13 +140,20 @@ object DedupClusters {
           pairs.select(col("id1"), col("id2")), eager = true))
       else None
     val raw = rawCut.map(_.df).getOrElse(pairs.select(col("id1"), col("id2")))
+    // every node that appears in any pair — the output row contract
+    val ids = raw.select(col("id1").as("id"))
+      .unionAll(raw.select(col("id2").as("id")))
 
-    // every node that appears in any pair — the output row contract;
+    if (onDriver) {
+      val labels = contractOnDriver(raw, ids.schema("id"), rawCut.flatMap(_.eagerCount))
+      if (labels.isDefined) {
+        rawCut.foreach(_.release())
+        return (labels.get, 0, () => ())
+      }
+    }
+
     // kept separately because star rewiring erases singleton self-pairs
-    val nodesCut = GraftBridge.persistCutFrame(
-      raw.select(col("id1").as("id"))
-        .unionAll(raw.select(col("id2").as("id")))
-        .distinct(), eager = true)
+    val nodesCut = GraftBridge.persistCutFrame(ids.distinct(), eager = true)
     val nodes = nodesCut.df
 
     // canonical directed edge set, larger → smaller; self-loops carry
@@ -199,6 +227,71 @@ object DedupClusters {
         Seq("id"), "left")
       .select(col("id"), coalesce(col("__root"), col("id")).as("component"))
     (labels, rounds.rounds, () => { nodesCut.release(); rounds.release() })
+  }
+
+  /** The star rounds' labels computed on the driver, when `raw`'s rows
+    * fit the session's broadcast threshold and the id type's equality
+    * is equality of its bytes; otherwise None. `counted` is the pair
+    * count when `raw` is an eager cut; else one bounded collect decides.
+    * Rows and schema equal the star rounds' output: a node per distinct
+    * id, a null id as (null, null), the component's minimum under
+    * Spark's ordering of the id type as its label.
+    */
+  private def contractOnDriver(raw: DataFrame, id: StructField,
+                               counted: Option[Long]): Option[DataFrame] = {
+    val threshold = GraftBridge.broadcastThreshold(raw.sparkSession)
+    // StringType matches the default UTF8_BINARY collation only
+    val bytesEquality = id.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }
+    if (threshold < 0 || !bytesEquality) return None
+    val maxRows = math.min(threshold / (2L * id.dataType.defaultSize), Int.MaxValue - 1L)
+    val typed = raw.select(col("id1").cast(id.dataType), col("id2").cast(id.dataType))
+    val rows = counted match {
+      case Some(n) if n > maxRows => return None
+      case Some(_) => GraftBridge.collectInternal(typed)
+      case None =>
+        val r = GraftBridge.collectInternal(typed.limit(maxRows.toInt + 1))
+        if (r.length > maxRows) return None
+        r
+    }
+
+    // union-find over node numbers; a root is its set's minimum id
+    val ord = PhysicalDataType.ordering(id.dataType)
+    val number = new java.util.HashMap[Any, Integer]
+    val value = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var nullId = false
+    def node(r: InternalRow, i: Int): Int =
+      if (r.isNullAt(i)) { nullId = true; -1 }
+      else {
+        val v = r.get(i, id.dataType)
+        val n = number.get(v)
+        if (n != null) n
+        else { number.put(v, value.size); parent += value.size; value += v; value.size - 1 }
+      }
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val up = parent(j); parent(j) = r; j = up }
+      r
+    }
+    rows.foreach { r =>
+      val (a, b) = (node(r, 0), node(r, 1))
+      if (a >= 0 && b >= 0) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) {
+          if (ord.lt(value(ra), value(rb))) parent(rb) = ra else parent(ra) = rb
+        }
+      }
+    }
+    val labels = value.indices.sortBy(value)(ord)
+      .map(i => InternalRow(value(i), value(find(i))))
+    Some(GraftBridge.localFrame(raw.sparkSession,
+      StructType(Seq(id, StructField("component", id.dataType, id.nullable))),
+      if (nullId) InternalRow(null, null) +: labels else labels))
   }
 
   /** Incremental connected components: fold a new batch of candidate

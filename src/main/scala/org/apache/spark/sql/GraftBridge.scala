@@ -102,17 +102,32 @@ object GraftBridge {
     * Rows are defensively copied before caching (the physical plan may
     * reuse row buffers); the cut is lazy — force it with an action (the
     * iterative loops' convergence counts do) or `eager = true`.
+    *
+    * An eager cut is built and counted inside one SQL execution of the
+    * origin query, as `localCheckpoint` is: its jobs, the shuffle stages
+    * an adaptive plan runs to build the RDD included, carry that
+    * execution id, and an `Observation` above the cut completes with the
+    * count. A lazy cut opens no execution: one would end before the cut
+    * is consumed and complete such an observation with the metrics of
+    * the stages run so far (a lazy `localCheckpoint` reports 0 rows that
+    * way).
     */
   def persistCutFrame(df: Dataset[Row], eager: Boolean = false): CutFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-      .setName("graft-cut")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def build() = {
+      val rdd = ds.queryExecution.toRdd.map(_.copy())
+        .setName("graft-cut")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // the eager materialization IS a count — carry it so callers that
+      // need the row count (iterative convergence checks) don't pay a
+      // second job for a number the persist already computed
+      (rdd, if (eager) Some(rdd.count()) else None)
+    }
+    val (rdd, eagerCount) =
+      if (eager)
+        execution.SQLExecution.withNewExecutionId(ds.queryExecution, Some("graft-cut"))(build())
+      else build()
     Option(trackedCuts.get).foreach(_ += rdd.id)
-    // the eager materialization IS a count — carry it so callers that
-    // need the row count (iterative convergence checks) don't pay a
-    // second job for a number the persist already computed
-    val eagerCount = if (eager) Some(rdd.count()) else None
     val frame = classic.Dataset.ofRows(ds.sparkSession,
       execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
     CutFrame(frame, () => {
@@ -166,6 +181,29 @@ object GraftBridge {
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)
   }
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes;
+    * negative when broadcast joins are off. */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
+  /** `df`'s rows in Catalyst's internal form (strings as `UTF8String`),
+    * collected by one SQL execution as `Dataset.collect` runs it. */
+  def collectInternal(df: Dataset[Row]): Array[catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollect()
+    }
+  }
+
+  /** A local frame of `rows` (internal form) with exactly `schema` —
+    * names, types, nullability and metadata — as [[pinLocalRelation]]
+    * builds from external rows. */
+  def localFrame(spark: SparkSession, schema: types.StructType,
+                 rows: Seq[catalyst.InternalRow]): Dataset[Row] =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(
+        catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
   /** Scale-adaptive spread for per-row-HEAVY map work (optimization
     * guide §2.5, "input skew: one huge unsplittable file ...

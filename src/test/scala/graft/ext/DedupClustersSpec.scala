@@ -25,6 +25,21 @@ class DedupClustersSpec extends SparkTestBase {
     val sc = spark.sparkContext
     def live: Set[Int] = sc.getPersistentRDDs.keySet.toSet
     val ps = pairs(5L -> 4L, 4L -> 3L, 3L -> 2L, 2L -> 1L, 10L -> 11L)
+    // under the broadcast threshold the list is contracted on the
+    // driver, which holds no storage at all
+    val ((driverLabels, _), none) = org.apache.spark.sql.GraftBridge.trackCuts {
+      DedupClusters.connectedComponentsReleasable(ps)
+    }
+    assert(none.isEmpty, "the driver path should hold no cut")
+    assert(driverLabels.count() == 7)
+    // broadcasts off: the star rounds run and own the cuts below
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try starRoundsRelease(ps, live)
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+  }
+
+  private def starRoundsRelease(ps: org.apache.spark.sql.DataFrame, live: => Set[Int]): Unit = {
     val ((labels, release), mine) = org.apache.spark.sql.GraftBridge.trackCuts {
       DedupClusters.connectedComponentsReleasable(ps)
     }
@@ -56,7 +71,7 @@ class DedupClustersSpec extends SparkTestBase {
     // though the returned labels frame is consumed later
     val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
-    val out = DedupClusters.connectedComponents(pairs(5L -> 4L, 4L -> 3L, 9L -> 8L))
+    val out = DedupClusters.componentsWithRounds(pairs(5L -> 4L, 4L -> 3L, 9L -> 8L))._1
     assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe0)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == parts0)
     assert(out.count() == 5L)
@@ -142,32 +157,63 @@ class DedupClustersSpec extends SparkTestBase {
     assert(DedupClusters.keepCanonical(docs, "doc_id", noPairs).count() == 2)
   }
 
+  /** Labels by a driver-side union-find whose roots are set minima
+    * under `ord`; a null id labels as (null, null). Ordered by id,
+    * nulls first, as `orderBy("id")` returns them. */
+  private def unionFind[T](edges: Seq[(Option[T], Option[T])])(
+      implicit ord: Ordering[T]): Seq[(Option[T], Option[T])] = {
+    val parent = scala.collection.mutable.Map[T, T]()
+    def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach {
+      case (Some(a), Some(b)) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+      case (a, b) => (a ++ b).foreach(find)
+    }
+    val nulls = if (edges.exists(e => e._1.isEmpty || e._2.isEmpty)) Seq(None -> None) else Nil
+    nulls ++ parent.keys.toSeq.sorted.map(id => Some(id) -> Some(find(id)))
+  }
+
+  /** Both paths' labels over `p`: equal schemas, equal rows, and equal
+    * to the union-find reference. The driver path must be the one taken
+    * (it holds no cut), so the comparison is not rounds against rounds. */
+  private def bothPathsMatch[T](p: org.apache.spark.sql.DataFrame,
+                                expected: Seq[(Option[T], Option[T])], clue: String): Unit = {
+    val (driver, cuts) = org.apache.spark.sql.GraftBridge.trackCuts(
+      DedupClusters.connectedComponents(p))
+    assert(cuts.isEmpty, s"$clue: the driver path should hold no cut")
+    val rounds = DedupClusters.componentsWithRounds(p)._1
+    assert(driver.schema == rounds.schema, clue)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect().toSeq
+      .map(r => (Option(r.get(0)), Option(r.get(1))))
+    val d = rows(driver)
+    assert(d == rows(rounds), clue)
+    assert(d == expected, clue)
+  }
+
   test("random graphs match a driver-side union-find reference") {
     for (seed <- Seq(1, 2, 3)) {
       val rnd = new scala.util.Random(seed)
+      // self-pairs kept: a self-paired id is a singleton node
       val edges = Seq.fill(50)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-        .filter { case (a, b) => a != b }
-      // union-find reference
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-        .map(id => id -> {
-          // min member of the component = min over nodes with same root
-          val root = find(id)
-          edges.flatMap(e => Seq(e._1, e._2)).distinct
-            .filter(find(_) == root).min
-        })
-      val got = DedupClusters.connectedComponents(edges.toDF("id1", "id2"))
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      assert(got == expected, s"seed=$seed")
+      bothPathsMatch(edges.toDF("id1", "id2"),
+        unionFind(edges.map { case (a, b) => (Some(a), Some(b)) }), s"seed=$seed")
+      // nullable ids, a null among them: (null, null) and no link
+      val withNull = edges.take(20).map { case (a, b) => (Option(a), Option(b)) } ++
+        Seq((Some(100L), None), (None, Some(3L)), (None, None))
+      bothPathsMatch(withNull.toDF("id1", "id2"), unionFind(withNull), s"seed=$seed, null ids")
     }
+    bothPathsMatch(pairs(), Nil, "empty list")
+    // U+FFFF sorts after U+1F600 in Java's UTF-16 order and before it in
+    // UTF-8 byte order, which is Spark's: the component's label is U+FFFF
+    val utf8: Ordering[String] = Ordering.by(org.apache.spark.unsafe.types.UTF8String.fromString)
+    val strs = Seq("\uFFFF" -> "\uD83D\uDE00", "a" -> "a", "c" -> "b")
+    val expected = unionFind(strs.map { case (a, b) => (Some(a), Some(b)) })(utf8)
+    assert(expected.contains(Some("\uD83D\uDE00") -> Some("\uFFFF")))
+    bothPathsMatch(strs.toDF("id1", "id2"), expected, "string ids")
   }
 
   test("result is partition-invariant") {
@@ -202,7 +248,7 @@ class DedupClustersSpec extends SparkTestBase {
   test("hitting maxIter without convergence raises instead of returning split components") {
     val chain = pairs((1L until 100L).map(i => i -> (i + 1)): _*)
     val e = intercept[IllegalStateException] {
-      DedupClusters.connectedComponents(chain, maxIter = 1)
+      DedupClusters.componentsWithRounds(chain, maxIter = 1)
     }
     assert(e.getMessage.contains("did not converge"))
   }

@@ -33,7 +33,9 @@ class OperatorJobsSpec extends SparkTestBase {
   // (operator, ceiling)
   private val ceilings: Seq[(String, () => Any, Int)] = Seq(
     ("DedupClusters.connectedComponents", () =>
-      DedupClusters.connectedComponents(pairs).collect(), 8),
+      DedupClusters.connectedComponents(pairs).collect(), 1),
+    ("DedupClusters.componentsWithRounds", () =>
+      DedupClusters.componentsWithRounds(pairs)._1.collect(), 8),
     ("EmbeddingSearch.lshNearDupPairs", () =>
       EmbeddingSearch.lshNearDupPairs(vecs, "id", "vec", threshold = 0.9,
         bits = 6, bands = 4).collect(), 2),
