@@ -45,7 +45,7 @@ object Bench {
     }))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // 32 executor threads — the engine's local[32] design point (and
-    // BenchOne's long-standing default). PROTOCOL BREAK (r13,
+    // graft.Inspect's default). PROTOCOL BREAK (r13,
     // BASELINE.md): this ran at 4 for rounds 1-12, which is what
     // split every heavy tier reading into two irreproducible classes
     // — builder passes exported CPUS=32 and read q68 ×100 at ~13 s
@@ -441,8 +441,8 @@ object Bench {
           }
           // one UNTIMED warm execution: tier queries are measured at
           // nreps=2, which sits on the JIT warm-up slope for the
-          // heavy gram-explode shapes (q68 ×100 BenchOne curve:
-          // 19.2 → 10.6 → ... → 9.7 steady) — the first timed rep
+          // heavy gram-explode shapes (q68 ×100 at 32 cores, successive reps:
+          // 19.2 → 10.6 → ... → 9.7 s steady) — the first timed rep
           // must not pay whole-stage-codegen compilation
           try { fn(spark, dir).count(): Unit }
           catch { case NonFatal(_) => () }

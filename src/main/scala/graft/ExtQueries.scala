@@ -3101,7 +3101,7 @@ object ExtQueries {
     * slice (the q89 discipline: the oracle is the exact computation).
     * The whole PQ pipeline — subspace split, L2 argmin encode, coded
     * serving state, literal-codebook decode — sits under this gate;
-    * lossy operating points are measured in RecallCheck, not asserted.
+    * RecallSpec pins the lossy operating points.
     */
   val q100 = Q(
     "q100_pq_exact",

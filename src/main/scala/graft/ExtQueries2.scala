@@ -168,8 +168,8 @@ object ExtQueries2 {
     * in double and the double add rounds back to the float — and the
     * two-stage probe with nprobe = nlist must equal brute force over
     * the slice (q100's oracle verbatim; the q100 discipline applied
-    * to the refinement stage). Lossy recall-vs-memory operating
-    * points are measured in RecallCheck, not asserted.
+    * to the refinement stage). At lossy codebooks RecallSpec pins
+    * that the refinement reconstructs with lower error than stage 1.
     */
   val q187 = Q(
     "q187_rq_exact",
@@ -409,8 +409,8 @@ object ExtQueries2 {
     * force bit for bit under the degenerate codebook — q100's oracle
     * verbatim, gating the rotation expression, its float round-trip,
     * and the composition. The LEARNED rotation (exact Gram → Jacobi →
-    * balanced allocation) is measured in RecallCheck and OpqSpec
-    * (MSE on a correlated corpus), not asserted.
+    * balanced allocation) is pinned in OpqSpec: it cuts PQ
+    * reconstruction MSE on a variance-imbalanced corpus.
     */
   val q191 = Q(
     "q191_opq_identity",

@@ -361,8 +361,8 @@ object ExtQueries3 {
     * ACTUALLY APPLIED rotation (array_position over rotateExpr
     * output), so the whole learned path — exact Gram agg → Jacobi →
     * balance → distributed application — is inside the gate. (q191
-    * keeps gating the identity composition; RecallCheck keeps the
-    * measured MSE value of learned rotations on correlated corpora.)
+    * keeps gating the identity composition; OpqSpec pins the MSE
+    * value of learned rotations on a variance-imbalanced corpus.)
     */
   val q202 = Q(
     "q202_opq_learned",

@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** One local-session factory for every main (Verify, Bench, BenchOne,
-  * ScaleCheck) — the config stanza (UTC, nanos-as-long for the events
+/** One local-session factory for every main (Verify, Bench, Inspect,
+  * AragonDemo) — the config stanza (UTC, nanos-as-long for the events
   * table, AQE, partitions=cores) must stay identical across them or
   * results drift between the correctness and benchmark surfaces.
   */
@@ -25,8 +25,9 @@ object GraftSession {
     *     decoded) leaves headroom for the operator's hash tables.
     *   - AQE on (default) + skewJoin on (default): runtime re-plan
     *     converts sort-merge joins to broadcast when a side measures
-    *     small, splits skewed partitions — SURVEY §8's SkewCheck table
-    *     documents when the built-ins suffice vs ops.Skew.saltedAgg.
+    *     small, splits skewed partitions. OpsSpec pins both on a hot
+    *     key (map-side partial aggregation, skew-split sort-merge
+    *     join): there the built-ins suffice and ops.Skew is not needed.
     *   - No spark.sql.shuffle.partitions in operator code: every
     *     operator here derives parallelism from config, never hardcodes.
     */

@@ -112,9 +112,8 @@ object Decontaminate {
     * only at its FIRST shared band so n_hits/max_cos never
     * double-count (the lshNearDupPairs dedup). A missed paraphrase
     * here is EVAL LEAKAGE, so this screen wants the banded operating
-    * points (measured in RecallCheck: bits=16 single-band catches
-    * 97-98% of near-dup contamination; bits=8 bands=4 reaches ~100%
-    * at comparable cost).
+    * points (RecallSpec pins it on planted near-dup contamination:
+    * bits=8 bands=4 catches all of it, single-band bits=8 misses some).
     */
   def byEmbeddingLsh(train: DataFrame, trainId: String, trainVec: String,
                      evalSet: DataFrame, evalId: String, evalVec: String,

@@ -96,7 +96,7 @@ object DedupClusters {
     * are consumed (written, counted, joined-and-materialized) —
     * storage returns to its pre-call level, which is what lets a
     * long-lived service session run CC per batch indefinitely
-    * (pinned: ScaleCheck's 10-invocation flat-storage probe). The
+    * (pinned in DedupClustersSpec: every block allocated is freed). The
     * labels remain CORRECT after release (the cut keeps recompute
     * lineage); consuming them again merely re-executes.
     */
@@ -107,9 +107,10 @@ object DedupClusters {
   }
 
   /** [[connectedComponents]] by star rounds whatever the pair list's
-    * size, plus the number of rounds executed — exposed so tests and
-    * ScaleCheck can pin the O(log n) round bound (a 500-link chain must
-    * converge in ~log rounds, not 500) and the rounds' job count.
+    * size, plus the number of rounds executed — exposed so
+    * DedupClustersSpec can pin the O(log n) round bound (a 400-link
+    * chain converges in ≤ 12 rounds, not 400) and OperatorJobsSpec the
+    * rounds' job count.
     */
   private[graft] def componentsWithRounds(pairs: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
     val (labels, iters, _) = componentsImpl(pairs, maxIter, onDriver = false)

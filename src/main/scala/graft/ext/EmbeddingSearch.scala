@@ -314,7 +314,8 @@ object EmbeddingSearch {
     // re-executes the corpus orderBy-limit (or the Lloyd rounds' last
     // aggregation). Pin once; downstream broadcasts become job-free
     // LocalTableScans with identical rows.
-    val pinned = GraftBridge.pinLocalRelation(cents)
+    val pinned = GraftBridge.localFrame(cents.sparkSession, cents.schema,
+      GraftBridge.collectInternal(cents))
     IvfIndex(pinned, assignCells(c, pinned))
   }
 
@@ -331,8 +332,8 @@ object EmbeddingSearch {
   /** Fold a new document batch into the index WITHOUT re-clustering:
     * assign new vectors to the stored centroids, union the assignment
     * table. Cells drift from optimal as the corpus shifts — rebuild
-    * with refineIters ≥ 1 when probe recall degrades (measured via
-    * RecallCheck), exactly the rebuild cadence a production IVF runs.
+    * ([[rebuildIvfIndex]]) when [[ivfRebuildAdvice]] flags the drift,
+    * exactly the rebuild cadence a production IVF runs.
     */
   def extendIvfIndex(index: IvfIndex, newDocs: DataFrame,
                      id: String, vec: String): IvfIndex = {
@@ -358,8 +359,8 @@ object EmbeddingSearch {
     * per-cell telemetry remains comparable across the rebuild. The
     * probe CONTRACT is preserved — same centroids/assignments schema,
     * [[ivfProbe]]/[[hardNegativesIvf]] run unchanged — but routing
-    * changes by design: that is what a rebuild is for (RecallCheck
-    * measures the recovery on a drifted fixture).
+    * changes by design: that is what a rebuild is for (IvfIndexSpec
+    * pins the recall it recovers on a drifted corpus).
     */
   def rebuildIvfIndex(index: IvfIndex, corpus: DataFrame, id: String, vec: String,
                       refineIters: Int = 2): IvfIndex = {
@@ -369,10 +370,10 @@ object EmbeddingSearch {
       transform(col("centroid"), x => x.cast("float")).as("__ctr_vec"))
     // pinned for the same reason as buildIvfIndex: the raw lloydRefine
     // plan would re-run its final corpus-wide round once per consumer
-    val refined = GraftBridge.pinLocalRelation(
-      lloydRefine(c, init, refineIters)
-        .select(col("cell"),
-          transform(col("centroid"), x => x.cast("float")).as("centroid")))
+    val cents = lloydRefine(c, init, refineIters)
+      .select(col("cell"), transform(col("centroid"), x => x.cast("float")).as("centroid"))
+    val refined = GraftBridge.localFrame(cents.sparkSession, cents.schema,
+      GraftBridge.collectInternal(cents))
     IvfIndex(refined, assignCells(c, refined))
   }
 
@@ -594,9 +595,8 @@ object EmbeddingSearch {
     *
     * With nprobe == nlist every cell is probed and the output is
     * row-identical to [[hardNegatives]] (pinned by the q92 oracle);
-    * at nprobe < nlist negatives-recall vs brute force is measured in
-    * RecallCheck — cells that cover the true top-k make the two
-    * equal, the planted-neighbor property the spec pins.
+    * at nprobe < nlist, cells that cover the true top-k make the two
+    * equal, the planted-neighbor property IvfIndexSpec pins.
     *
     * @param pairs (qid, qvec, pos_id) — corpus-sized is fine
     */
@@ -813,13 +813,11 @@ object EmbeddingSearch {
     * so the rerank scores each candidate exactly once. Lifts the
     * single-band recall plateau while keeping the one-shuffle
     * bucket-join shape — the niche where IVF's assignment pass isn't
-    * wanted. Measured (RecallCheck, sf0.01×10 fixture): single-band
-    * tops out at 88-92% recall@10 at ANY bits; bits=4 bands=8 reaches
-    * 97.4% and bits=4 bands=12 98.8%, both FASTER than single-band
-    * bits=8 (smaller per-band buckets, so the amplified union is
-    * cheaper than one coarse bucket). Banding wants few bits per band
-    * and many bands — wide single signatures only shrink buckets and
-    * LOWER recall.
+    * wanted. RecallSpec pins the lift: on its jittered sf0.001 corpus,
+    * bits=8 bands=4 holds recall@10 above a floor that single-band
+    * bits=8 reads below. Banding wants few bits per band and many
+    * bands — wide single signatures only shrink buckets and LOWER
+    * recall.
     */
   def lshTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
               queries: DataFrame, queryId: String, queryVec: String,

@@ -456,9 +456,9 @@ object MinHashLsh {
     * b=16 → ~0.67, b=8 → ~0.86); mass under the curve left of the
     * policy threshold is wasted verification work (false candidates),
     * mass above 1−p right of it is missed recall. Pick the b whose
-    * knee brackets the policy threshold, then confirm with a measured
-    * recall table — this is the arithmetic companion to the measured
-    * RecallCheck, not a substitute.
+    * knee brackets the policy threshold, then confirm with recall
+    * measured on the corpus at hand — the table is arithmetic, not a
+    * measurement.
     *
     * Output: (bands, r, j_ppm, p_ppm), all BIGINT.
     */

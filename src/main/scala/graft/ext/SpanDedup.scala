@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *     O(len + |starts|) per row with NO shuffle. Even a document
   *     that is pure boilerplate (every position flagged) costs one
   *     linear pass, so corpus inflation stress stays
-  *     input-proportional (ScaleCheck, SURVEY §8).
+  *     input-proportional (q68 runs in the ×10 and ×100 bench tiers).
   *
   * Determinism: md5 keys and integer arithmetic only — bit-identical
   * on any engine, partitioning-invariant (oracle-checkable end to

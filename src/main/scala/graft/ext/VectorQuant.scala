@@ -38,8 +38,9 @@ import org.apache.spark.sql.functions._
   * oracle discipline: the oracle is the exact computation). The
   * d2 = |s|² − 2·s·c + |c|² expansion evaluates to exactly 0.0 in IEEE
   * arithmetic when s == c (a − 2a + a), so the degenerate argmin is
-  * exact, not approximately exact. Lossy operating points are measured
-  * (RecallCheck: compression-vs-recall table), not asserted.
+  * exact, not approximately exact. RecallSpec pins the lossy
+  * operating points: recall@10 with and without an exact rerank, and
+  * RQ's reconstruction error against PQ's.
   */
 object VectorQuant {
 
@@ -138,7 +139,8 @@ object VectorQuant {
     // once per consumer (encode, residual, probe: ~5 executions per
     // composed RQ gate). One collect here, job-free LocalTableScan
     // everywhere after; rows/schema preserved exactly.
-    val pinned = GraftBridge.pinLocalRelation(book.df)
+    val pinned = GraftBridge.localFrame(book.df.sparkSession, book.df.schema,
+      GraftBridge.collectInternal(book.df))
     book.release()
     PqCodebook(m, dsub, pinned)
   }
@@ -244,7 +246,7 @@ object VectorQuant {
     * against their RECONSTRUCTED vectors — a per-row decode expression,
     * no corpus join anywhere in the plan. With the degenerate codebook
     * the output is bit-identical to the exact probe (gate q100); at
-    * lossy operating points recall is measured in RecallCheck.
+    * lossy operating points RecallSpec pins its recall@10.
     */
   def ivfProbePq(index: PqIvfIndex,
                  queries: DataFrame, queryId: String, queryVec: String,
@@ -398,8 +400,9 @@ object VectorQuant {
   /** Two-stage (residual) quantization state: a coarse stage-1 PQ
     * codebook plus a stage-2 codebook trained on the stage-1
     * residuals. At the same total code budget this refines where
-    * plain PQ truncates — the classic RQ/two-level ADC layout — and
-    * recall at fixed memory is measured in RecallCheck, not asserted.
+    * plain PQ truncates — the classic RQ/two-level ADC layout.
+    * RecallSpec pins that 8 + 8 codes reconstruct with lower error
+    * than the 8-code PQ they refine.
     */
   final case class RqBooks(book1: PqCodebook, book2: PqCodebook)
 

@@ -162,30 +162,15 @@ object GraftBridge {
     */
   def persistCut(df: Dataset[Row]): Dataset[Row] = persistCutFrame(df).df
 
-  /** Pin a BOUNDED-state frame's rows as a local relation (optimization
-    * guide §2.4 — remove shuffles/jobs outright): trained codebooks,
-    * IVF centroid tables and similar m·ksub / nlist-row results are
-    * re-executed from their full plan every time a consumer broadcasts
-    * or collects them (each `broadcast(book)` is its own job over the
-    * corpus-aggregation subtree). Collecting ONCE at build time and
-    * rebuilding the frame as a LocalRelation makes every downstream
-    * broadcast a job-free LocalTableScan and every collect a no-op.
-    *
-    * Only for frames whose size is bounded by CONTRACT (the
-    * collectBook / collectCentroids driver-state rule) — never corpus
-    * -proportional data. Rows and schema are preserved exactly, so
-    * consumers are bit-identical.
-    */
-  def pinLocalRelation(df: Dataset[Row]): Dataset[Row] = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
   /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes;
     * negative when broadcast joins are off. */
   def broadcastThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Block until every event already posted to `sc`'s listener bus
+    * has been delivered, so a listener's records are final. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** `df`'s rows in Catalyst's internal form (strings as `UTF8String`),
     * collected by one SQL execution as `Dataset.collect` runs it. */
@@ -196,9 +181,16 @@ object GraftBridge {
     }
   }
 
-  /** A local frame of `rows` (internal form) with exactly `schema` —
-    * names, types, nullability and metadata — as [[pinLocalRelation]]
-    * builds from external rows. */
+  /** A local frame of `rows` (internal form) with exactly `schema`:
+    * names, types, nullability and metadata.
+    *
+    * `localFrame(spark, df.schema, collectInternal(df))` pins a frame
+    * whose size is bounded by contract (a trained codebook, an IVF
+    * centroid table) as a `LocalRelation`: one collect at build time,
+    * then every downstream broadcast is a job-free `LocalTableScan` and
+    * every collect a no-op, where the raw plan would re-execute its
+    * corpus-wide subtree once per consumer. Never for data that grows
+    * with the corpus. */
   def localFrame(spark: SparkSession, schema: types.StructType,
                  rows: Seq[catalyst.InternalRow]): Dataset[Row] =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],

@@ -67,7 +67,7 @@ class CutExecutionSpec extends SparkTestBase {
         spark.range(1000).groupBy((col("id") % 7).as("k")).count(), eager = true)
       finally {
         sc.clearJobGroup()
-        org.apache.spark.ListenerDrain(sc)
+        GraftBridge.drainListeners(sc)
         sc.removeSparkListener(listener)
       }
     try {

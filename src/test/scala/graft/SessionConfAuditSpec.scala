@@ -8,10 +8,13 @@ import scala.jdk.CollectionConverters._
   * while it runs (a streaming foreachBatch, a second thread). Operators
   * that need different settings run under a private session clone
   * ([[org.apache.spark.sql.GraftBridge.scopedSession]], used by
-  * [[graft.ext.Rounds]]). This spec scans the operator packages' sources
-  * for conf writes so a new one fails the suite. Dev mains at the top of
-  * `graft` (SkewCheck and friends) own their session and are not
-  * scanned.
+  * [[graft.ext.Rounds]]). This spec scans every source under `graft`,
+  * the top-level mains and gate files included, for conf writes so a
+  * new one fails the suite.
+  *
+  * The set of mains is fixed: Bench, Verify, TierTable, AragonDemo and
+  * the dev tool Inspect. A measured claim about an operator belongs in
+  * a spec that asserts it, not in a main that prints it.
   *
   * The same scan holds the one-barrier rule: operators and gates cut
   * lineage through [[org.apache.spark.sql.GraftBridge.persistCutFrame]],
@@ -34,11 +37,13 @@ class SessionConfAuditSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val localCheckpoint = """\blocalCheckpoint\s*\(""".r
   private val cache = """\.\s*(cache\s*\(\s*\)|persist\s*\()""".r
 
+  private def allSources(dir: Path): Seq[Path] =
+    Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+
   private def sources(dirs: Seq[String]): Seq[Path] =
     dirs.map(root.resolve).flatMap { dir =>
       assert(Files.isDirectory(dir), s"$dir is gone — update the scanned packages")
-      Files.walk(dir).iterator().asScala
-        .filter(_.toString.endsWith(".scala")).toList
+      allSources(dir)
     }
 
   private final case class Hit(file: Path, line: Int, text: String) {
@@ -70,10 +75,25 @@ class SessionConfAuditSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("no operator package writes session conf") {
-    val files = sources(packages)
-    assert(files.nonEmpty)
+    val files = allSources(root)
+    assert(files.exists(_.getParent == root) && sources(packages).forall(files.contains))
     val found = hits(files, write)
     assert(found.isEmpty, "session conf written inside an operator:\n" + found.mkString("\n"))
+  }
+
+  test("the set of mains is Bench, Verify, TierTable, AragonDemo and Inspect") {
+    val obj = """\bobject\s+(\w+)""".r
+    val main = """\bdef\s+main\s*\(|\bobject\s+\w+\s+extends\s+App\b""".r
+    // each main is named by the last object declared at or above it
+    val mains = for {
+      f <- allSources(Paths.get("src/main/scala"))
+      lines = Files.readAllLines(f).asScala.map(code)
+      (line, i) <- lines.zipWithIndex
+      if main.findFirstIn(line).isDefined
+    } yield lines.take(i + 1).flatMap(obj.findAllMatchIn(_).map(_.group(1))).last
+    assert(mains.toSet == Set("Bench", "Verify", "TierTable", "AragonDemo", "Inspect"),
+      s"mains: ${mains.sorted.mkString(", ")}. A measured claim about an operator " +
+        "belongs in a spec that asserts it, not in a main that prints it")
   }
 
   test("operators and gates cut through GraftBridge; localCheckpoint only in AragonPipeline.snapshot and q215") {

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession per suite; config mirrors the driver harness
@@ -28,7 +27,7 @@ trait SparkTestBase extends AnyFunSuite {
     try body
     finally {
       sc.clearJobGroup()
-      ListenerDrain(sc)
+      GraftBridge.drainListeners(sc)
       sc.removeSparkListener(listener)
     }
     n.get

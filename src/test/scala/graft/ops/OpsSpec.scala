@@ -209,6 +209,35 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
+  test("a hot key needs no salt: the aggregate combines map-side, AQE splits the skewed sort-merge join") {
+    // half the rows on key 0, the rest over 1,000 keys. Broadcast is off
+    // and the skew thresholds are lowered to fit this size, in a private
+    // session so the suite's own conf is never written
+    val s = org.apache.spark.sql.GraftBridge.scopedSession(spark, Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k"))
+    val n = 200000L
+    val fact = s.range(0, n, 1, 8).select(
+      when(col("id") % 2 === 0, 0L).otherwise(pmod(xxhash64(col("id")), lit(1000L)) + 1).as("k"),
+      col("id").as("v"))
+    val dim = s.range(1001).select(col("id").as("k"))
+
+    val agg = fact.groupBy("k").agg(count(lit(1)).as("c"), sum(col("v")).as("s"))
+    val aggPlan = agg.queryExecution.sparkPlan.toString
+    assert(aggPlan.contains("partial_count") && aggPlan.contains("partial_sum"), aggPlan)
+
+    // every fact row meets one dim row; v rides along so the hot
+    // partition's shuffle bytes do not compress away
+    val joined = fact.join(dim, "k").agg(count(lit(1)), sum(col("v")))
+    // collect runs this frame's own plan, so its executed plan is final
+    assert(joined.collect().head == org.apache.spark.sql.Row(n, n * (n - 1) / 2))
+    val joinPlan = joined.queryExecution.executedPlan.toString
+    assert(joinPlan.contains("SortMergeJoin(skew=true)") && joinPlan.contains("skewed"), joinPlan)
+  }
+
   test("Profile.numeric: one row per column, nulls excluded from n_vals, exact distincts") {
     val df = Seq[(java.lang.Double, java.lang.Double)](
       (1.0, 10.0), (2.0, 10.0), (null, 30.0), (2.0, null))
